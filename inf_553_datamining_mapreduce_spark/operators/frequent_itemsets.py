@@ -171,7 +171,10 @@ def son_frequent_itemsets(
             if not chunk:
                 return
             frequent = apriori_local(chunk, threshold)
-            yield pd.DataFrame({"itemset": [list(t) for t in frequent]})
+            # No locally frequent itemset: yield nothing. An empty list
+            # column is float64, which Arrow cannot convert to array<bigint>.
+            if frequent:
+                yield pd.DataFrame({"itemset": [list(t) for t in frequent]})
 
         candidates_df = b.mapInPandas(phase1, _ITEMSET_SCHEMA).distinct()
         candidates = [

@@ -10,16 +10,22 @@ text, so every DataFrame query in the engine has a SQL twin for free.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from inf_553_datamining_mapreduce_spark.schemas import TESTDATA_SCHEMAS
 from inf_553_datamining_mapreduce_spark.sources.readers import read_parquet_table
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver table as a temp view named after the table."""
+def register_views(spark: SparkSession, sf_dir: str, sql: str) -> None:
+    """Register the driver tables ``sql`` reads as temp views named after
+    the table. A table is read when it is named as a whole word in the text
+    (SQL identifiers are case-insensitive); a superset only costs one more
+    view, and every table a statement reads is named in it."""
     for name in TESTDATA_SCHEMAS:
-        read_parquet_table(spark, sf_dir, name).createOrReplaceTempView(name)
+        if re.search(rf"\b{name}\b", sql, flags=re.IGNORECASE):
+            read_parquet_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 # Spark-dialect SQL text for headline queries. Mirrors the DataFrame plans;
@@ -54,5 +60,6 @@ SQL_QUERIES: dict[str, str] = {
 
 
 def run_sql(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(SQL_QUERIES[name])
+    sql = SQL_QUERIES[name]
+    register_views(spark, sf_dir, sql)
+    return spark.sql(sql)

@@ -8,6 +8,18 @@ Reference equivalents (SURVEY.md §2.1):
   (new) — Parquet scans over the driver's test tables, the engine's primary
           format. Column pruning and predicate pushdown reach the scan via
           Catalyst; keep all filters/projections declarative.
+
+Scan contract: ``read_parquet_table`` runs at most ONE schema-inference job
+per file per process (per version of the file and set of schema confs).
+``spark.read.parquet(path)`` starts a one-task footer job on every call; the
+schema Spark infers is therefore kept, keyed on the real path, the file's
+stat signature (size + mtime, or every part file's for a directory-style
+table) and the session confs that change Parquet schema conversion, and
+later reads pass it back via ``spark.read.schema``. Each call still builds a
+fresh relation, so two reads of one table carry distinct attribute ids and
+self-join cleanly. A rewritten file gets a new signature and is inferred
+again; a path that cannot be ``stat``-ed (object stores) is inferred on
+every read. There is no conf or knob for this.
 """
 
 from __future__ import annotations
@@ -50,6 +62,69 @@ _SPLIT_SMALL_SCANS = {
 # the plan is IDENTICAL to before on real deployments.
 _SPLIT_SMALL_MAX_BYTES = 32 * 1024 * 1024
 
+# Session confs that change the StructType Spark infers from a Parquet
+# footer (footer -> schema conversion, plus the part-file merge step).
+# ``nanosAsLong`` matters most: it decides whether ``events.ts`` reads as
+# ``bigint`` or ``timestamp_ntz``.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+# (real path, schema-conf values) -> (stat signature, schema Spark inferred).
+# One entry per path and conf set; a rewritten file replaces its entry.
+# Two threads missing at once both infer and store the same schema.
+_INFERRED: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _hidden(name: str) -> bool:
+    """Entries Spark's file listing skips (``_SUCCESS``, ``.crc`` files)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _stat_signature(path: str) -> tuple[tuple[str, int, int], ...] | None:
+    """``(name, size, st_mtime_ns)`` of a file, or of every part file of a
+    directory-style table (names relative to the table, sorted). None when
+    the path cannot be ``stat``-ed locally (object stores)."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        parts = []
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            for f in files:
+                if not _hidden(f):
+                    full = os.path.join(root, f)
+                    st = os.stat(full)
+                    parts.append(
+                        (os.path.relpath(full, path), st.st_size, st.st_mtime_ns)
+                    )
+        return tuple(sorted(parts))
+    except OSError:
+        return None
+
+
+def _scan_parquet(spark: SparkSession, path: str, sig: tuple | None) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only when this
+    (path, stat signature, schema confs) has not been inferred before."""
+    if sig is None:
+        return spark.read.parquet(path)
+    key = (
+        os.path.realpath(path),
+        tuple(spark.conf.get(c) for c in _SCHEMA_CONFS),
+    )
+    hit = _INFERRED.get(key)
+    if hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _INFERRED[key] = (sig, df.schema)
+    return df
+
 
 def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver-generated parquet table (TESTDATA.md).
@@ -70,7 +145,9 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
         # of the host timezone.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    sig = _stat_signature(path)
+    df = _scan_parquet(spark, path, sig)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -83,14 +160,13 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     key = _SPLIT_SMALL_SCANS.get(name)
     if key is not None:
-        path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-        try:
-            small = os.path.getsize(path) <= _SPLIT_SMALL_MAX_BYTES
-        except OSError:
-            # Non-local storage (object store / directory table): at that
-            # point the table is real-deployment-sized and the scan is
-            # already parallel; skip.
-            small = False
+        # A directory-style table is sized by its part files. Non-local
+        # storage (object store, no signature): at that point the table is
+        # real-deployment-sized and the scan is already parallel; skip.
+        small = (
+            sig is not None
+            and sum(size for _, size, _ in sig) <= _SPLIT_SMALL_MAX_BYTES
+        )
         n = spark.sparkContext.defaultParallelism
         if small and n > 1:
             # HASH repartition on the table key, not round-robin: row

@@ -1,7 +1,11 @@
 """Spot-check a SUBSET of registry queries against their DuckDB oracles
 at sf0.01 — the iteration loop for new/edited queries without paying the
 full-registry sweep. Same vanilla session and compare logic as
-``full_correctness.py`` (imported, not duplicated). Usage:
+``full_correctness.py`` (imported, not duplicated). Each line also gives
+the query's Spark time and the jobs it ran, read from its job groups:
+``build_jobs`` are the eager jobs inside the query function (schema
+inference, memo builds, checkpoints), ``execute_jobs`` those of the final
+``toPandas``. Usage:
 
     python scripts/check_queries.py q1 q2 ...  [--sf /root/testdata/sf0.01]
 """
@@ -46,19 +50,37 @@ def main() -> None:
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
+    sc = spark.sparkContext
+
+    def in_group(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
     bad = 0
-    for name in args:
+    for i, name in enumerate(args):
+        group = f"check:{i}:{name}"
         t0 = time.perf_counter()
-        spark_pdf = queries[name](spark, sf_dir).toPandas()
+        df = in_group(f"{group}:build", lambda: queries[name](spark, sf_dir))
+        spark_pdf = in_group(f"{group}:execute", df.toPandas)
+        dt = round(time.perf_counter() - t0, 2)
+        # The tracker is fed asynchronously by the listener bus.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = " ".join(
+            f"{p}_jobs={len(sc.statusTracker().getJobIdsForGroup(f'{group}:{p}'))}"
+            for p in ("build", "execute")
+        )
         if name not in oracles:
-            print(f"{name}: NO ORACLE rows={len(spark_pdf)}")
+            print(f"{name}: NO ORACLE rows={len(spark_pdf)} {dt}s {jobs}")
             continue
         oracle_pdf = con.execute(oracles[name]).fetchdf()
         row = _compare(spark_pdf, oracle_pdf)
-        dt = round(time.perf_counter() - t0, 2)
         ok = row["hash_match"] is True and row["err"] is None
         bad += 0 if ok else 1
-        print(f"{name}: {'OK' if ok else 'FAIL'} {row} {dt}s")
+        print(f"{name}: {'OK' if ok else 'FAIL'} {row} {dt}s {jobs}")
     sys.exit(1 if bad else 0)
 
 

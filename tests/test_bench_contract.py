@@ -106,3 +106,32 @@ def test_bench_unknown_subset_name_fails_loudly():
     )
     assert proc.returncode != 0
     assert "unknown queries" in (proc.stderr + proc.stdout)
+
+
+def test_bench_warmup_falls_back_to_the_subsets_first_query():
+    """A subset without ``group_avg_nation_region`` still warms up, with its
+    own first query, so one-time session costs are not booked to it."""
+    sys.path.insert(0, REPO)
+    import bench
+
+    warmed: list[str] = []
+
+    class _Result:
+        def count(self) -> int:
+            return 0
+
+    def _stub(name):
+        def run(spark, sf_dir):
+            warmed.append(name)
+            return _Result()
+
+        return run
+
+    # No session: every other warm-up step fails on the stub and is skipped.
+    for subset, expected in (
+        (["word_frequencies", "exact_duplicates"], "word_frequencies"),
+        (["word_frequencies", "group_avg_nation_region"], "group_avg_nation_region"),
+    ):
+        warmed.clear()
+        bench._warmup(object(), {n: _stub(n) for n in subset}, "/nonexistent")
+        assert warmed == [expected]

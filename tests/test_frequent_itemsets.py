@@ -71,6 +71,15 @@ def test_son_custom_partitioning_is_exact(spark, sf_dir, baskets_local):
     assert got == _brute_force(baskets_local, SUPPORT)
 
 
+def test_son_partition_without_frequent_itemsets_is_empty(spark):
+    """A partition holding baskets but no locally frequent itemset yields no
+    phase-1 frame (an empty one cannot convert to array<bigint>)."""
+    baskets = spark.createDataFrame(
+        [([i],) for i in range(6)], "basket array<bigint>"
+    )
+    assert son_frequent_itemsets(baskets, 2, num_partitions=1).collect() == []
+
+
 def test_son_output_rendering_contract(tmp_path):
     """Reference contract: sizes ascending one line each; itemsets rendered
     '(a, b)' joined by ', '; within a line shorter-first then element-wise
