@@ -54,11 +54,14 @@ def golden_only() -> dict[str, str]:
     """
     return {
         "edge_betweenness_customers": (
-            "IEEE credit sums are accumulation-order-dependent; proven by "
-            "hand goldens + the green integer twins"
+            "the engine adds the per-slice IEEE credit partials in a "
+            "fixed order, so its doubles repeat exactly run to run, but "
+            "no other engine sums in that order and reproduces them bit "
+            "for bit; proven by hand goldens + the green integer twins"
         ),
         "communities_girvan_newman": (
-            "float GN over the same order-dependent credits; proven "
+            "float GN over the same fixed-order credits: repeatable in "
+            "this engine, not bit-reproducible by another; proven "
             "byte-for-byte against the reference's committed "
             "communities.txt + the green fixed-point GN twin"
         ),

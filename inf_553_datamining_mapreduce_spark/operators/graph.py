@@ -30,8 +30,8 @@ schedule by value only, leaving tie order nondeterministic; the engine adds
 Spark-first shape: graph = two DataFrames (edges with src < dst, optional
 vertices). Edge building is explode + self-equi-join (never the reference's
 O(V^2) constant-key cross join, ``Betweenness.scala:27-30``). The per-source
-BFS fans out as one task per source with a broadcast adjacency — the same
-parallelization the reference uses, minus the closure-capture anti-pattern.
+BFS fans out over sources with a broadcast adjacency, one task per core —
+the reference's parallelization, minus the closure-capture anti-pattern.
 Driver-side state (adjacency, removal schedule) is gated by explicit size
 checks; components offer a distributed label-propagation path for graphs
 beyond the union-find gate.
@@ -60,6 +60,11 @@ from inf_553_datamining_mapreduce_spark.deploy import ensure_worker_imports
 # on the driver (as in the reference); refuse silently-unbounded collects.
 MAX_DRIVER_EDGES = 2_000_000
 
+
+class _DriverGated(ValueError):
+    """A driver-side collect would exceed ``MAX_DRIVER_EDGES``."""
+
+
 _BETWEENNESS_SCHEMA = StructType(
     [
         StructField("src", LongType(), False),
@@ -67,6 +72,7 @@ _BETWEENNESS_SCHEMA = StructType(
         StructField("credit", DoubleType(), False),
     ]
 )
+_RESULT_SCHEMA = "src long not null, dst long not null, betweenness double"
 
 
 # ---------------------------------------------------------------------------
@@ -141,25 +147,22 @@ def _collect_adjacency(
     """Symmetric adjacency dict (``graph.collectNeighborIds(Either)``,
     ``Betweenness.scala:53``), gated by MAX_DRIVER_EDGES.
 
-    The edge plan is persisted around the gate-count + collect pair so the
-    (potentially expensive) edge-building join evaluates once, not twice.
+    One bounded collect: at most one row past the gate comes back, so the
+    edge plan evaluates once and an oversized graph is refused without
+    counting it.
     """
-    proj = edges.select("src", "dst").persist()
-    try:
-        n_edges = proj.count()
-        if n_edges > MAX_DRIVER_EDGES:
-            raise ValueError(
-                f"graph has {n_edges} edges > {MAX_DRIVER_EDGES}; driver-side "
-                "adjacency is gated — partition the graph or raise the gate "
-                "deliberately"
-            )
-        adj: dict[int, list[int]] = defaultdict(list)
-        for row in proj.collect():
-            s, d = int(row["src"]), int(row["dst"])
-            adj[s].append(d)
-            adj[d].append(s)
-    finally:
-        proj.unpersist()
+    rows = edges.select("src", "dst").limit(MAX_DRIVER_EDGES + 1).collect()
+    if len(rows) > MAX_DRIVER_EDGES:
+        raise _DriverGated(
+            f"graph has more than {MAX_DRIVER_EDGES} edges; driver-side "
+            "adjacency is gated — partition the graph or raise the gate "
+            "deliberately"
+        )
+    adj: dict[int, list[int]] = defaultdict(list)
+    for row in rows:
+        s, d = int(row["src"]), int(row["dst"])
+        adj[s].append(d)
+        adj[d].append(s)
     if vertices is not None:
         for row in vertices.collect():
             adj.setdefault(int(row[0]), [])
@@ -271,6 +274,80 @@ def _csr_credit_kernel(sources, ids, indptr, indices, edge_credit) -> None:
             np.add.at(edge_credit, e_idx, credit)
 
 
+def _kernel_betweenness(
+    edges: DataFrame,
+    vertices: DataFrame | None,
+    sample_sources: int | None,
+    seed: int = 17,
+):
+    """The broadcast-CSR kernel of :func:`edge_betweenness`, returned on
+    the driver as three numpy arrays ``(src, dst, betweenness)``: src <
+    dst, sorted by (src, dst), edges with zero total credit absent.
+    Raises ``_DriverGated`` beyond the ``MAX_DRIVER_EDGES`` gate."""
+    import numpy as np
+
+    spark = edges.sparkSession
+    adj = _collect_adjacency(edges, vertices)
+    # Isolated vertices are valid BFS sources in the reference
+    # (Betweenness.scala:133 iterates every user) but contribute an empty
+    # credit map — skip them; the result is identical.
+    active = sorted(v for v, nbrs in adj.items() if nbrs)
+    scale = 1.0
+    if sample_sources is not None and sample_sources < len(active):
+        import random as _random
+
+        rng = _random.Random(seed)
+        scale = len(active) / sample_sources
+        active = sorted(rng.sample(active, sample_sources))
+    if not active:
+        empty = np.zeros(0, dtype=np.int64)
+        return empty, empty, np.zeros(0, dtype=np.float64)
+
+    # CSR over the active (non-isolated) vertex set
+    ids = np.array(sorted(adj), dtype=np.int64)
+    pos = {int(v): i for i, v in enumerate(ids)}
+    indptr = np.zeros(len(ids) + 1, dtype=np.int64)
+    flat: list[int] = []
+    for i, v in enumerate(ids):
+        nbrs = sorted(pos[u] for u in adj[int(v)])
+        flat.extend(nbrs)
+        indptr[i + 1] = len(flat)
+    indices = np.array(flat, dtype=np.int64)
+    # Undirected edge slot of every directed CSR position: both directions
+    # of u-v share one slot, and slots ascend in (src, dst) order because
+    # ids are sorted.
+    n = len(ids)
+    tail = np.repeat(np.arange(n, dtype=np.int64), np.diff(indptr))
+    keys, slot = np.unique(
+        np.minimum(tail, indices) * n + np.maximum(tail, indices),
+        return_inverse=True,
+    )
+    ensure_worker_imports(spark)
+    bc = spark.sparkContext.broadcast((ids, indptr, indices, slot, len(keys)))
+
+    def per_slice(srcs: list[int]):
+        import numpy as _np
+
+        ids_l, indptr_l, indices_l, slot_l, n_slots = bc.value
+        edge_credit = _np.zeros(len(indices_l), dtype=_np.float64)
+        _csr_credit_kernel(srcs, ids_l, indptr_l, indices_l, edge_credit)
+        return _np.bincount(slot_l, weights=edge_credit, minlength=n_slots)
+
+    source_idx = [pos[v] for v in active]
+    n_slices = min(len(source_idx), spark.sparkContext.defaultParallelism)
+    slices = [source_idx[i::n_slices] for i in range(n_slices)]
+    partials = (
+        spark.sparkContext.parallelize(slices, n_slices).map(per_slice).collect()
+    )
+    bc.unpersist()
+    total = np.zeros(len(keys), dtype=np.float64)
+    for part in partials:
+        total += part
+    total = total * scale / 2.0
+    nz = np.nonzero(total)[0]
+    return ids[keys[nz] // n], ids[keys[nz] % n], total[nz]
+
+
 def edge_betweenness(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -283,10 +360,20 @@ def edge_betweenness(
     src < dst, ordered (``Betweenness.scala:133-138``: per-source credits,
     canonicalized, summed, halved).
 
-    Execution: sources partition across tasks; each task runs the CSR/numpy
-    kernel over a broadcast adjacency and emits ONE partial-credit row per
-    DAG edge per partition (not per source), so the final shuffle is
-    O(E * partitions) regardless of V.
+    Execution: one bounded collect builds the adjacency on the driver;
+    the sorted sources are dealt round-robin into
+    ``min(#sources, defaultParallelism)`` slices (round-robin, not
+    contiguous ranges, so id-correlated BFS cost spreads evenly); each
+    slice runs the CSR/numpy kernel over a broadcast adjacency and returns
+    ONE float64 partial per undirected edge, both directions folded in the
+    worker. The driver adds the partials in slice order and applies
+    ``scale / 2``, so repeated runs give bit-identical doubles; edges with
+    zero total credit are absent. No row shuffle: driver memory is
+    P × E × 8 B for P slices and E edges — 64 MB at the 2M-edge gate on 4
+    cores. The stage is sized to cores because each Python task costs
+    ~0.25 s of fixed worker set-up regardless of its work (measured on a
+    4-core host), while a source's BFS costs about O(V + E), so splitting
+    further buys little balance and pays that cost per extra task.
 
     ``sample_sources``: the 100-TB path. Exact betweenness is O(V·E); a
     uniform source sample of size s scales per-source credits by V/s — the
@@ -308,7 +395,7 @@ def edge_betweenness(
       refusal (the ``connected_components`` ``method='auto'``
       convention applied here).
     """
-    import numpy as np
+    import pyarrow as pa
 
     if method not in ("auto", "kernel", "distributed"):
         raise ValueError(f"unknown method {method!r}")
@@ -316,72 +403,17 @@ def edge_betweenness(
         return edge_betweenness_distributed(
             edges, sample_sources=sample_sources, seed=seed
         )
-    spark = edges.sparkSession
-    ensure_worker_imports(spark)
     try:
-        adj = _collect_adjacency(edges, vertices)
-    except ValueError:
+        src, dst, bet = _kernel_betweenness(edges, vertices, sample_sources, seed)
+    except _DriverGated:
         if method == "kernel":
             raise
         return edge_betweenness_distributed(
             edges, sample_sources=sample_sources, seed=seed
         )
-    # Isolated vertices are valid BFS sources in the reference
-    # (Betweenness.scala:133 iterates every user) but contribute an empty
-    # credit map — skip them; the result is identical.
-    active = sorted(v for v, nbrs in adj.items() if nbrs)
-    scale = 1.0
-    if sample_sources is not None and sample_sources < len(active):
-        import random as _random
-
-        rng = _random.Random(seed)
-        scale = len(active) / sample_sources
-        active = sorted(rng.sample(active, sample_sources))
-    if not active:
-        return spark.createDataFrame([], _BETWEENNESS_SCHEMA)
-
-    # CSR over the active (non-isolated) vertex set
-    ids = np.array(sorted(adj), dtype=np.int64)
-    pos = {int(v): i for i, v in enumerate(ids)}
-    indptr = np.zeros(len(ids) + 1, dtype=np.int64)
-    flat: list[int] = []
-    for i, v in enumerate(ids):
-        nbrs = sorted(pos[u] for u in adj[int(v)])
-        flat.extend(nbrs)
-        indptr[i + 1] = len(flat)
-    indices = np.array(flat, dtype=np.int64)
-    source_idx = [pos[v] for v in active]
-    bc = spark.sparkContext.broadcast((ids, indptr, indices))
-
-    def per_partition(src_iter: Iterable[int]) -> Iterable[tuple[int, int, float]]:
-        import numpy as _np
-
-        ids_l, indptr_l, indices_l = bc.value
-        edge_credit = _np.zeros(len(indices_l), dtype=_np.float64)
-        srcs = list(src_iter)
-        if not srcs:
-            return
-        _csr_credit_kernel(srcs, ids_l, indptr_l, indices_l, edge_credit)
-        tail_l = _np.repeat(
-            _np.arange(len(ids_l), dtype=_np.int64), _np.diff(indptr_l)
-        )
-        nz = _np.nonzero(edge_credit)[0]
-        for e in nz:
-            u1 = int(ids_l[tail_l[e]])
-            u2 = int(ids_l[indices_l[e]])
-            if u1 > u2:
-                u1, u2 = u2, u1
-            yield (u1, u2, float(edge_credit[e]))
-
-    n_slices = min(len(source_idx), spark.sparkContext.defaultParallelism * 4)
-    rdd = spark.sparkContext.parallelize(source_idx, n_slices).mapPartitions(
-        per_partition
-    )
-    return (
-        spark.createDataFrame(rdd, _BETWEENNESS_SCHEMA)
-        .groupBy("src", "dst")
-        .agg((F.sum("credit") * F.lit(scale) / F.lit(2.0)).alias("betweenness"))
-        .orderBy("src", "dst")
+    return edges.sparkSession.createDataFrame(
+        pa.table({"src": src, "dst": dst, "betweenness": bet}),
+        _RESULT_SCHEMA,
     )
 
 
@@ -1235,25 +1267,31 @@ def girvan_newman_communities(
     The search loop runs driver-local over the collected (gated) edge list —
     the same data the reference collects for its schedule — so each probe is
     O(E) (incremental modularity + union-find) instead of a full distributed
-    job cascade. ``sample_sources`` forwards to ``edge_betweenness`` — the
-    Brandes-Pich-style estimator that makes the schedule affordable on large
-    graphs (None = exact, reference parity).
+    job cascade. The schedule is read straight from the betweenness kernel's
+    driver-side result, with no DataFrame round trip. ``sample_sources`` is
+    ``edge_betweenness``'s Brandes-Pich-style estimator that makes the
+    schedule affordable on large graphs (None = exact, reference parity).
     """
+    import pyarrow as pa
+
     spark = edges.sparkSession
-    # Persisted: the (often expensive) edge-building plan is consumed twice —
-    # by the betweenness adjacency collect and by the schedule-tail collect
-    # below — and must not evaluate twice.
-    edges_p = edges.persist()
+    # Persisted under source sampling: the (often expensive) edge-building
+    # plan is then consumed twice — by the betweenness adjacency collect and
+    # by the schedule-tail collect below — and must not evaluate twice. Exact
+    # betweenness reads it once, where a cache only adds jobs.
+    edges_p = edges.persist() if sample_sources is not None else edges
     try:
-        bet = edge_betweenness(edges_p, vertices, sample_sources=sample_sources)
-        schedule_rows = bet.collect()  # gated transitively by _collect_adjacency
-        schedule = sorted(
-            (
+        try:
+            src, dst, bet = _kernel_betweenness(edges_p, vertices, sample_sources)
+            schedule = list(zip(src.tolist(), dst.tolist(), bet.tolist()))
+        except _DriverGated:  # edge_betweenness's fallback
+            schedule = [
                 (int(r["src"]), int(r["dst"]), float(r["betweenness"]))
-                for r in schedule_rows
-            ),
-            key=lambda t: (-t[2], t[0], t[1]),
-        )
+                for r in edge_betweenness_distributed(
+                    edges_p, sample_sources=sample_sources
+                ).collect()
+            ]
+        schedule.sort(key=lambda t: (-t[2], t[0], t[1]))
         ordered_edges = [(s, d) for s, d, _ in schedule]
         # Under source sampling, edges touched by no sampled BFS carry zero
         # credit and are absent from `bet` — they are still graph edges.
@@ -1320,8 +1358,9 @@ def girvan_newman_communities(
             for v, c in comp.items():
                 members[c].append(v)
             data = sorted((sorted(g) for g in members.values()), key=lambda g: g[0])
+            # An Arrow table becomes a JVM-side relation: no Python stage.
             return spark.createDataFrame(
-                [(g,) for g in data],
+                pa.table({"members": pa.array(data, pa.list_(pa.int64()))}),
                 StructType([StructField("members", ArrayType(LongType()), False)]),
             )
         # Community.scala:142-145: rewind one coarse step, zoom in, research.

@@ -5,7 +5,8 @@ full-registry sweep. Same vanilla session and compare logic as
 the query's Spark time and the jobs it ran, read from its job groups:
 ``build_jobs`` are the eager jobs inside the query function (schema
 inference, memo builds, checkpoints), ``execute_jobs`` those of the final
-``toPandas``. Usage:
+``toPandas``, and ``tasks`` the tasks of all their stages — an over-split
+Python stage shows here. Usage:
 
     python scripts/check_queries.py q1 q2 ...  [--sf /root/testdata/sf0.01]
 """
@@ -69,18 +70,25 @@ def main() -> None:
         dt = round(time.perf_counter() - t0, 2)
         # The tracker is fed asynchronously by the listener bus.
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs = " ".join(
-            f"{p}_jobs={len(sc.statusTracker().getJobIdsForGroup(f'{group}:{p}'))}"
-            for p in ("build", "execute")
-        )
+        tracker = sc.statusTracker()
+        job_ids = {
+            p: tracker.getJobIdsForGroup(f"{group}:{p}") for p in ("build", "execute")
+        }
+        # A stage reused by a later job keeps its id: count it once.
+        stage_ids = {
+            s for ids in job_ids.values() for j in ids for s in tracker.getJobInfo(j).stageIds
+        }
+        tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stage_ids)
+        counts = " ".join(f"{p}_jobs={len(ids)}" for p, ids in job_ids.items())
+        counts += f" tasks={tasks}"
         if name not in oracles:
-            print(f"{name}: NO ORACLE rows={len(spark_pdf)} {dt}s {jobs}")
+            print(f"{name}: NO ORACLE rows={len(spark_pdf)} {dt}s {counts}")
             continue
         oracle_pdf = con.execute(oracles[name]).fetchdf()
         row = _compare(spark_pdf, oracle_pdf)
         ok = row["hash_match"] is True and row["err"] is None
         bad += 0 if ok else 1
-        print(f"{name}: {'OK' if ok else 'FAIL'} {row} {dt}s {jobs}")
+        print(f"{name}: {'OK' if ok else 'FAIL'} {row} {dt}s {counts}")
     sys.exit(1 if bad else 0)
 
 

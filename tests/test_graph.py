@@ -2738,3 +2738,34 @@ def test_edge_betweenness_method_routing(spark, monkeypatch):
     assert 0.6 * exact_total < est < 1.4 * exact_total
     with pytest.raises(ValueError, match="not both"):
         GR.edge_betweenness_distributed(edf, sample_sources=5, source_mod=2)
+
+
+def test_edge_betweenness_core_sized_kernel_repeats_exactly(spark):
+    """The kernel runs at most one Python task per core (each Python task
+    pays a fixed worker set-up, whatever its work), and the driver adds
+    the per-slice partials in a fixed order, so two runs return identical
+    doubles."""
+    rng = random.Random(5)
+    pairs = sorted({tuple(sorted(rng.sample(range(60), 2))) for _ in range(200)})
+    edf = _edges_df(spark, pairs)
+    sc = spark.sparkContext
+    group = "graph-core-sized-kernel"
+    sc.setJobGroup(group, group)
+    try:
+        first = edge_betweenness(edf).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # The tracker is fed asynchronously by the listener bus.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stage_ids = {
+        s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
+    }
+    tasks = [tracker.getStageInfo(s).numTasks for s in stage_ids]
+    # The edge input is local, so every stage here is either the bounded
+    # adjacency collect or the kernel stage.
+    assert tasks and max(tasks) <= sc.defaultParallelism, tasks
+    second = edge_betweenness(edf).collect()
+    assert len(first) == len(pairs)
+    assert [tuple(r) for r in first] == [tuple(r) for r in second]
