@@ -897,11 +897,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["simhash_near_duplicates"] = _simhash_near_duplicates
     q["embedding_near_duplicates"] = _embedding_near_duplicates
     def _topk_cosine_ivf(spark, sf):
-        # probe=7 of 8 cells: measured recall 1.0 at sf0.001/sf0.01 (random
-        # vectors cluster poorly — IVF's worst case — so a high probe
-        # fraction is needed for exactness here); output therefore equals
-        # brute force and shares its oracle. n_probe is the scan-fraction
-        # knob at scale.
+        # probe=7 of 8 cells: measured recall 1.0 at sf0.001, sf0.01 and
+        # sf0.1 (random vectors cluster poorly — IVF's worst case — so a
+        # high probe fraction is needed for exactness here); output
+        # therefore equals brute force and shares its oracle. The
+        # quantizer is the integer Lloyd loop with first-k init by vec_id,
+        # so this holds at every core count (checked at 1, 2, 4 and 8).
+        # n_probe is the scan-fraction knob at scale.
         (e,) = _t(spark, sf, "embeddings")
         return SIM.ivf_top_k(
             e, _ann_queries(spark, sf), k=5, n_centroids=8, n_probe=7
@@ -2223,9 +2225,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def _kmeans_centroids_fixedpoint(spark, sf):
         # Lloyd's k-means in engine-exact integer arithmetic — the IVF
-        # coarse-quantizer training loop under the oracle gate (the
-        # library KMeans inside topk_cosine_ivf is seeded-float and can
-        # only be property-tested).
+        # coarse-quantizer training loop under the oracle gate; the same
+        # loop trains topk_cosine_ivf's and topk_ivf_fixedpoint's cells.
         (emb,) = _t(spark, sf, "embeddings")
         return SIM.kmeans_fixedpoint(emb, k=8, iters=3)
 

@@ -99,8 +99,7 @@ def _warmup(spark, queries, sf_dir) -> None:
     the first sizeable driver collect (row serde + socket path — measured
     on the float GN at sf0.1: first collecting query in a session pays
     +1.5 s over steady state, the whole round-5 'wobble'), the Python
-    worker pool (a trivial mapInPandas), and the ML codepath (a tiny
-    KMeans fit — class loading + treeAggregate machinery).
+    worker pool (a trivial mapInPandas), and the iterative loops below.
 
     The small query is ``group_avg_nation_region``, or the subset's first
     query when ``$SPARK_GRAFT_BENCH_QUERIES`` leaves it out.
@@ -140,19 +139,6 @@ def _warmup(spark, queries, sf_dir) -> None:
         spark.range(100).mapInPandas(_ident, "id long").write.format(
             "noop"
         ).mode("overwrite").save()
-    except Exception:
-        pass
-    try:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-        from pyspark.sql import functions as F
-
-        tiny = spark.range(64).select(
-            array_to_vector(
-                F.array((F.col("id") % 7).cast("double"), F.lit(1.0))
-            ).alias("features")
-        )
-        KMeans(k=2, seed=1, maxIter=2).fit(tiny)
     except Exception:
         pass
     try:

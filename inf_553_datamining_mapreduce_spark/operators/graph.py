@@ -48,7 +48,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
     LongType,
     StructField,
     StructType,
@@ -65,13 +64,6 @@ class _DriverGated(ValueError):
     """A driver-side collect would exceed ``MAX_DRIVER_EDGES``."""
 
 
-_BETWEENNESS_SCHEMA = StructType(
-    [
-        StructField("src", LongType(), False),
-        StructField("dst", LongType(), False),
-        StructField("credit", DoubleType(), False),
-    ]
-)
 _RESULT_SCHEMA = "src long not null, dst long not null, betweenness double"
 
 
@@ -463,14 +455,14 @@ def edge_betweenness_distributed(
     active = sym.select(F.col("src").alias("id")).distinct()
     n_active = active.count()
     if n_active == 0:
-        return spark.createDataFrame([], _BETWEENNESS_SCHEMA)
+        return spark.createDataFrame([], _RESULT_SCHEMA)
     scale = 1.0
     src_df = active
     if source_mod is not None:
         src_df = active.filter(F.col("id") % source_mod == 0)
         n_sampled = src_df.count()
         if n_sampled == 0:
-            return spark.createDataFrame([], _BETWEENNESS_SCHEMA)
+            return spark.createDataFrame([], _RESULT_SCHEMA)
         scale = n_active / n_sampled
     elif sample_sources is not None and sample_sources < n_active:
         scale = n_active / sample_sources
@@ -513,7 +505,7 @@ def edge_betweenness_distributed(
     dagr = dag.join(route, ["source", "head"]).localCheckpoint()
     max_lvl = dagr.agg(F.max("lvl")).first()[0]
     if max_lvl is None:
-        return spark.createDataFrame([], _BETWEENNESS_SCHEMA)
+        return spark.createDataFrame([], _RESULT_SCHEMA)
 
     pending = None  # (source, v, w): credit mass arriving from one level deeper
     credit_parts = []
@@ -801,37 +793,37 @@ def connected_components(
     """``(id, component)`` with component = smallest vertex id in the
     component (GraphX ``connectedComponents`` labeling, ``Community.scala:22``).
 
-    method='unionfind': driver union-find (gated; the reference's graphs are
-    driver-small and its own cc result is collected anyway).
+    method='unionfind': driver union-find (the reference's graphs are
+    driver-small and its own cc result is collected anyway). One bounded
+    collect, as in ``_collect_adjacency``; the labels come back through an
+    Arrow table, a JVM-side relation with no Python stage. Past
+    ``MAX_DRIVER_EDGES`` it falls back to labelprop (same labels).
     method='labelprop': distributed min-label propagation — the scale path;
     converges in diameter iterations, localCheckpoint per round to cut
     lineage.
-    method='auto': unionfind under the gate, else labelprop.
+    method='auto': the same as 'unionfind'.
     """
+    import pyarrow as pa
+
     spark = edges.sparkSession
     if method in ("auto", "unionfind"):
-        proj = edges.select("src", "dst").persist()
-        n_edges = proj.count()
-        if method == "auto":
-            method = "unionfind" if n_edges <= MAX_DRIVER_EDGES else "labelprop"
-        if method != "unionfind":
-            proj.unpersist()
-    if method == "unionfind":
-        edge_list = [(int(r["src"]), int(r["dst"])) for r in proj.collect()]
-        proj.unpersist()
-        vids: set[int] = {v for e in edge_list for v in e}
-        if vertices is not None:
-            vids.update(int(r[0]) for r in vertices.collect())
-        comp = _components_local(edge_list, vids)
-        return spark.createDataFrame(
-            sorted(comp.items()),
-            StructType(
-                [
-                    StructField("id", LongType(), False),
-                    StructField("component", LongType(), False),
-                ]
-            ),
-        )
+        rows = edges.select("src", "dst").limit(MAX_DRIVER_EDGES + 1).collect()
+        if len(rows) <= MAX_DRIVER_EDGES:
+            edge_list = [(int(s), int(d)) for s, d in rows]
+            vids: set[int] = {v for e in edge_list for v in e}
+            if vertices is not None:
+                vids.update(int(r[0]) for r in vertices.collect())
+            comp = _components_local(edge_list, vids)
+            ids = sorted(comp)
+            return spark.createDataFrame(
+                pa.table(
+                    {
+                        "id": pa.array(ids, pa.int64()),
+                        "component": pa.array([comp[v] for v in ids], pa.int64()),
+                    }
+                ),
+                "id long not null, component long not null",
+            )
 
     sym = edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -4247,7 +4239,7 @@ def sgns_embedding_clusters(
     from inf_553_datamining_mapreduce_spark.operators.similarity import (
         _centroid_array,
         _lloyd_loop,
-        _scored_centroids,
+        _nearest_cell,
     )
 
     inv = (
@@ -4265,9 +4257,7 @@ def sgns_embedding_clusters(
         vecs.crossJoin(F.broadcast(_centroid_array(cent)))
         .select(
             F.col("vec_id").cast("long").alias("vertex"),
-            F.array_min(_scored_centroids("cents", "q"))["cluster_id"]
-            .cast("int")
-            .alias("cluster_id"),
+            _nearest_cell("q").cast("int").alias("cluster_id"),
         )
         .orderBy("vertex")
     )

@@ -170,9 +170,9 @@ def _bucket_table(
 
 def _gate_query_side(queries: DataFrame, op: str) -> int:
     """Count-then-refuse gate for the float-ANN QUERY side: ``ivf_top_k``
-    collects the query table to the driver for probe assignment and
-    ``lsh_top_k`` broadcasts it into the candidate join — both correct
-    only while the query batch is driver-small. The corpus side has had
+    broadcasts its (query, cell) probe table and ``lsh_top_k`` the query
+    buckets into the candidate join — both correct only while the query
+    batch is driver-small. The corpus side has had
     this gate since round 6 (``dedup.MAX_BROADCAST_VECTORS``); an
     oversized QUERY table would OOM the driver before any refusal
     (ADVICE round 11). Past the gate, the answer is batching on the
@@ -201,66 +201,52 @@ def ivf_top_k(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     query_id_col: str = "query_id",
-    seed: int = 7,
-    max_iter: int = 5,
+    iters: int = 5,
 ) -> DataFrame:
-    """IVF-style approximate top-k: a k-means coarse quantizer
-    (``pyspark.ml.clustering.KMeans``) assigns every embedding to a cell;
-    each query probes its ``n_probe`` nearest centroids and ranks only the
-    embeddings in those cells by exact cosine.
+    """IVF-style approximate top-k: the fixed-point Lloyd quantizer
+    (``_kmeans_centroids``, the one ``ivf_topk_fixedpoint`` trains)
+    assigns every embedding to a cell, each query probes its ``n_probe``
+    nearest cells, and only the embeddings in those cells are ranked by
+    exact float cosine ((cosine DESC, neighbor_id ASC) total order).
 
-    The inverted-file trade: scan fraction ~ n_probe/n_centroids instead of
-    1.0, recall governed by how often true neighbors share a probed cell.
-    Centroids are driver-small; the cell assignment is one ml transform over
-    the big side, and the probe join is a broadcast of (query, cell) pairs.
+    The inverted-file trade: scan fraction ~ n_probe/n_centroids instead
+    of 1.0, recall governed by how often true neighbors share a probed
+    cell. Training, cell assignment and probing are integer arithmetic
+    with first-``n_centroids`` init by id, so the cells, and hence the
+    result, do not depend on the core count or the input layout; a
+    corpus with fewer vectors than cells just gets one cell per vector.
 
-    ``max_iter`` defaults well below the ml-lib default (20): a COARSE
+    Shape at scale: ``iters`` broadcast passes over the corpus to train,
+    one more to assign, a probe table of queries x n_probe rows built by
+    pure projection, and a broadcast probe join that touches only the
+    probed cells. No UDF and no driver collect; the query-side gate is
+    one count.
+    ``iters`` stays well below library k-means defaults: a COARSE
     quantizer only needs cells balanced enough to bound the scan
-    fraction — extra Lloyd iterations each cost a full pass over the
-    corpus and measurably dominate the query (2.1 s of a 4.5 s warm run
-    at sf0.1 at 20 iterations) while recall is governed by n_probe.
+    fraction, each extra pass costs a corpus scan, and recall is
+    governed by ``n_probe``.
     """
-    import numpy as np
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     # Refuse an over-gate query batch BEFORE paying the corpus k-means.
     _gate_query_side(queries, "ivf_top_k")
     e = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(emb_col).cast("array<double>").alias("e_emb"),
-    ).withColumn("features", array_to_vector("e_emb"))
-    # KMeans cannot fit fewer points than clusters; an index over a corpus
-    # that small has nothing to prune — brute force IS the right plan there.
-    if e.limit(n_centroids).count() < n_centroids:
-        return brute_force_top_k(
-            embeddings, queries, k=k, id_col=id_col, emb_col=emb_col,
-            query_id_col=query_id_col,
-        )
-    model = KMeans(
-        k=n_centroids, seed=seed, featuresCol="features", maxIter=max_iter
-    ).fit(e)
-    assigned = model.transform(e).select(
-        "neighbor_id", "e_emb", F.col("prediction").alias("cell")
+        F.col(id_col).alias("vec_id"), F.col(emb_col).alias("embedding")
     )
-
-    centroids = np.array([np.asarray(c) for c in model.clusterCenters()])
-    q_rows = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(emb_col).cast("array<double>").alias("q_emb"),
-    ).collect()
-    probe_rows = []
-    for r in q_rows:
-        qv = np.array(r["q_emb"], dtype=np.float64)
-        d = ((centroids - qv) ** 2).sum(axis=1)
-        for cell in np.argsort(d)[:n_probe]:
-            probe_rows.append((int(r["query_id"]), list(r["q_emb"]), int(cell)))
-    spark = embeddings.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, q_emb array<double>, cell int"
+    _, cent, _ = _kmeans_centroids(e, n_centroids, iters)
+    cent_arr = F.broadcast(_centroid_array(cent))
+    cells = _kmeans_quantized(e, "embedding").crossJoin(cent_arr).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("e_emb"),
+        _nearest_cell("q").alias("cell"),
     )
-    scored = assigned.join(F.broadcast(probes), "cell").filter(
+    qe = queries.select(
+        F.col(query_id_col).alias("vec_id"), F.col(emb_col).alias("embedding")
+    )
+    probes = _kmeans_quantized(qe, "embedding").crossJoin(cent_arr).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("q_emb"),
+        _probe_cells("q", n_probe).alias("cell"),
+    )
+    scored = cells.join(F.broadcast(probes), "cell").filter(
         F.col("neighbor_id") != F.col("query_id")
     ).select(
         "query_id",
@@ -434,24 +420,26 @@ def embedding_quantize_int8(embeddings: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Fixed-point Lloyd's k-means — the learned coarse quantizer behind IVF,
 # in engine-exact integer arithmetic (the pagerank/GN BIGINT convention)
-# so the full iterative clustering sits under the DuckDB oracle gate,
-# unlike ``ivf_top_k``'s ``pyspark.ml`` quantizer whose seeded float path
-# can only be property-tested.
+# so the full iterative clustering sits under the DuckDB oracle gate.
+# One quantizer serves every IVF path: ``ivf_top_k`` (float cosine
+# rerank), ``ivf_topk_fixedpoint`` and ``ivfpq_*`` (integer rerank) all
+# train it, assign with ``_nearest_cell`` and probe with ``_probe_cells``.
 
 KMEANS_SCALE = 10000.0  # frozen literal shared with the oracle SQL
 
 
-def _kmeans_quantized(embeddings: DataFrame) -> DataFrame:
-    """(vec_id, q) with q = floor(x * 10000) per dimension as BIGINT —
-    float32 -> double is exact, so the single multiply+floor is the one
-    (deterministic) IEEE op and everything downstream is integer."""
+def _kmeans_quantized(embeddings: DataFrame, *keep: str) -> DataFrame:
+    """(vec_id, *keep, q) with q = floor(x * 10000) per dimension as
+    BIGINT — float32 -> double is exact, so the single multiply+floor is
+    the one (deterministic) IEEE op and everything downstream is
+    integer."""
     q = F.transform(
         F.col("embedding"),
         lambda x: F.floor(x.cast("double") * F.lit(KMEANS_SCALE)).cast(
             "long"
         ),
     )
-    return embeddings.select("vec_id", q.alias("q"))
+    return embeddings.select("vec_id", *keep, q.alias("q"))
 
 
 def _kmeans_centroids(
@@ -462,13 +450,13 @@ def _kmeans_centroids(
     return _lloyd_loop(_kmeans_quantized(embeddings), k, iters)
 
 
-def _scored_centroids(cents_col: str, q_col: str) -> Column:
+def _scored_centroids(q_col: str) -> Column:
     """Per-row (dist, cluster_id) struct array against the broadcast
     centroid array — the zero-shuffle assignment kernel: because struct
     comparison is lexicographic, ``array_min`` of this IS the
     (dist, cluster_id) argmin and ``array_sort`` IS the probe order."""
     return F.transform(
-        F.col(cents_col),
+        F.col("cents"),
         lambda cc: F.struct(
             F.aggregate(
                 F.zip_with(
@@ -479,6 +467,24 @@ def _scored_centroids(cents_col: str, q_col: str) -> Column:
             ).alias("dist"),
             cc["cluster_id"].alias("cluster_id"),
         ),
+    )
+
+
+def _nearest_cell(q_col: str) -> Column:
+    """Nearest centroid's cluster_id for the integer vector ``q_col``
+    against the broadcast ``cents`` array: the (dist, cluster_id) argmin,
+    so ties go to the smaller id."""
+    return F.array_min(_scored_centroids(q_col))["cluster_id"]
+
+
+def _probe_cells(q_col: str, n_probe: int) -> Column:
+    """Generator over the ``n_probe`` nearest cluster_ids of ``q_col``,
+    in (dist, cluster_id) order (the oracle's window order): one output
+    row per probed cell, pure projection, no per-query window shuffle."""
+    return F.explode(
+        F.slice(F.array_sort(_scored_centroids(q_col)), 1, n_probe)[
+            "cluster_id"
+        ]
     )
 
 
@@ -524,9 +530,7 @@ def _lloyd_loop(
         ).select(
             "vec_id",
             "q",
-            F.array_min(_scored_centroids("cents", "q"))[
-                "cluster_id"
-            ].alias("cluster_id"),
+            _nearest_cell("q").alias("cluster_id"),
         )
         # ONE aggregate carries both the per-dim sums and the cluster
         # size (every point contributes a row to every dim, so the
@@ -594,7 +598,8 @@ def kmeans_fixedpoint(
     distributed Lloyd's step, cost O(corpus x k x dims) per pass with
     NO driver collect anywhere (centroids stay a bounded DataFrame).
     Citation: reference has no ML surface (SURVEY.md §2); this is the
-    IVF coarse-quantizer training loop (`ivf_top_k`) made oracle-able.
+    IVF coarse-quantizer training loop (``ivf_top_k`` and
+    ``ivf_topk_fixedpoint`` train their cells with it) made oracle-able.
     """
     _, cent, counts = _kmeans_centroids(embeddings, k, iters)
     return (
@@ -639,32 +644,13 @@ def ivf_topk_fixedpoint(
     vecs, cent, _ = _kmeans_centroids(embeddings, n_clusters, iters)
     cent_arr = F.broadcast(_centroid_array(cent))
     assigned = vecs.crossJoin(cent_arr).select(
-        "vec_id",
-        "q",
-        F.array_min(_scored_centroids("cents", "q"))["cluster_id"].alias(
-            "cluster_id"
-        ),
+        "vec_id", "q", _nearest_cell("q").alias("cluster_id")
     )
     qv = _kmeans_quantized(
         queries.select(F.col(query_id_col).alias("vec_id"), "embedding")
     ).select(F.col("vec_id").alias("query_id"), F.col("q").alias("qq"))
-    # probe order = array_sort of the same distance structs (lexicographic
-    # = (dist, cluster_id), matching the oracle's window order) — pure
-    # projection, no per-query window shuffle
-    probes = (
-        qv.crossJoin(cent_arr)
-        .select(
-            "query_id",
-            "qq",
-            F.explode(
-                F.slice(
-                    F.array_sort(_scored_centroids("cents", "qq")),
-                    1,
-                    n_probe,
-                )
-            ).alias("p"),
-        )
-        .select("query_id", "qq", F.col("p")["cluster_id"].alias("cluster_id"))
+    probes = qv.crossJoin(cent_arr).select(
+        "query_id", "qq", _probe_cells("qq", n_probe).alias("cluster_id")
     )
     dot = F.aggregate(
         F.zip_with("qq", "q", lambda a, b: a * b),
@@ -719,9 +705,7 @@ def _pq_assign(subs: DataFrame, cb: DataFrame) -> DataFrame:
     )
     return subs.join(F.broadcast(cents), "sub").select(
         *[c for c in subs.columns],
-        F.array_min(_scored_centroids("cents", "sq"))["cluster_id"]
-        .cast("int")
-        .alias("code_id"),
+        _nearest_cell("sq").cast("int").alias("code_id"),
     )
 
 
@@ -1184,11 +1168,7 @@ def ivfpq_build_index(
         )
     cent_arr = F.broadcast(_centroid_array(cent))
     assigned = vecs.crossJoin(cent_arr).select(
-        "vec_id",
-        "q",
-        F.array_min(_scored_centroids("cents", "q"))["cluster_id"]
-        .cast("int")
-        .alias("cell"),
+        "vec_id", "q", _nearest_cell("q").cast("int").alias("cell")
     )
     cent_cells = cent.select(
         F.col("cluster_id").cast("int").alias("cell"), F.col("c").alias("cc")
@@ -1274,18 +1254,8 @@ def ivfpq_topk_fixedpoint(
     ).select(F.col("vec_id").alias("query_id"), F.col("q").alias("qq"))
     probes = (
         qv.crossJoin(cent_arr)
-        .select(
-            "query_id",
-            "qq",
-            F.explode(
-                F.slice(
-                    F.array_sort(_scored_centroids("cents", "qq")), 1, n_probe
-                )
-            ).alias("p"),
-        )
-        .select(
-            "query_id", "qq", F.col("p")["cluster_id"].cast("int").alias("cell")
-        )
+        .select("query_id", "qq", _probe_cells("qq", n_probe).alias("p"))
+        .select("query_id", "qq", F.col("p").cast("int").alias("cell"))
     )
     qres = probes.join(F.broadcast(cent_cells), "cell").select(
         "query_id",
@@ -1494,10 +1464,7 @@ def semantic_dedup_keep_best(
     """
     vecs, cent, _ = _kmeans_centroids(embeddings, k, iters)
     assigned = vecs.crossJoin(F.broadcast(_centroid_array(cent))).select(
-        "vec_id",
-        F.array_min(_scored_centroids("cents", "q"))["cluster_id"].alias(
-            "cluster_id"
-        ),
+        "vec_id", _nearest_cell("q").alias("cluster_id")
     )
     p = F.transform(
         F.col("embedding"),
@@ -1620,10 +1587,7 @@ def build_semantic_index(
     vecs, cent, _ = _kmeans_centroids(embeddings, k, iters)
     cents_row = _centroid_array(cent).localCheckpoint()
     assigned = vecs.crossJoin(F.broadcast(cents_row)).select(
-        "vec_id",
-        F.array_min(_scored_centroids("cents", "q"))["cluster_id"].alias(
-            "cluster_id"
-        ),
+        "vec_id", _nearest_cell("q").alias("cluster_id")
     )
     pts = (
         assigned.join(_p100(embeddings), "vec_id")
@@ -1681,9 +1645,7 @@ def incremental_semantic_dedup(
             "vec_id",
             "p",
             "n2",
-            F.array_min(_scored_centroids("cents", "q"))["cluster_id"].alias(
-                "cluster_id"
-            ),
+            _nearest_cell("q").alias("cluster_id"),
         )
     )
     # Same cluster-key salt as the batch operator (guide §2.5): the

@@ -10,6 +10,9 @@ one makes proof freshness auditable directly — every registry query,
 every round, in one committed file. Run from the repo root:
 
     python scripts/full_correctness.py [sf_dir]
+
+``$SPARK_GRAFT_CPUS`` sets the session's core count (``local[N]``,
+default 8).
 """
 
 from __future__ import annotations
@@ -112,8 +115,11 @@ def main() -> None:
     # must carry its own runtime requirements. $SPARK_GRAFT_DRIVER_MEM is
     # harness SIZING (how big the vanilla driver's JVM is), not an engine
     # config — the small-heap envelope mode pins it at 3g.
+    # $SPARK_GRAFT_CPUS (default 8) is the core count: parity must hold
+    # at every count, not only the default.
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
     builder = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("full-correctness")
     )
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
@@ -216,6 +222,7 @@ def main() -> None:
             "round": _round_tag(),
             "sf_dir": sf_dir,
             "driver_memory": mem or "spark-default",
+            "cpus": cpus,
             "explicit_release_per_query": not no_explicit,
             "pressure_release_fires": (
                 nonlocal_counter["n"] if no_explicit else None

@@ -458,6 +458,25 @@ def test_ivf_topk_recall_vs_bruteforce(spark, sf_dir):
     )
     assert len(approx) > 0
     assert hit / len(approx) >= 0.4  # probing half the cells on random data
+    # The integer quantizer's cells do not depend on the input layout.
+    one, four = (
+        ivf_top_k(e, queries, k=5, n_centroids=8, n_probe=2).collect()
+        for e in (emb.repartition(1), emb.repartition(4, "vec_id"))
+    )
+    assert one == four
+
+
+def test_topk_cosine_ivf_equals_bruteforce_sf001(spark):
+    """The registry's IVF row shares ``topk_cosine``'s oracle, so at sf0.01
+    it must return exactly the brute-force rows whatever the session's
+    core count."""
+    import __spark_entry__ as entrymod
+
+    q = entrymod.queries()
+    sf = "/root/testdata/sf0.01"
+    assert sorted(q["topk_cosine_ivf"](spark, sf).collect()) == sorted(
+        q["topk_cosine"](spark, sf).collect()
+    )
 
 
 def test_streaming_stateful_running_totals(spark, sf_dir, tmp_path):
@@ -665,10 +684,10 @@ def test_embedding_near_dup_gate_fires_before_collect(spark, sf_dir, monkeypatch
 def test_float_ann_query_side_gate_fires_before_collect(
     spark, sf_dir, monkeypatch
 ):
-    """ivf_top_k collects and lsh_top_k broadcasts the QUERY table; both
-    must refuse an over-gate query batch via count() before any driver
-    materialization (ADVICE round 11 — the corpus side has been gated
-    since round 6, the query side was not)."""
+    """ivf_top_k and lsh_top_k broadcast the QUERY side into their
+    candidate joins; both must refuse an over-gate query batch via count()
+    before any driver materialization (ADVICE round 11 — the corpus side
+    has been gated since round 6, the query side was not)."""
     import pyspark.sql
 
     from inf_553_datamining_mapreduce_spark.operators import dedup, similarity

@@ -2739,6 +2739,21 @@ def test_edge_betweenness_method_routing(spark, monkeypatch):
     with pytest.raises(ValueError, match="not both"):
         GR.edge_betweenness_distributed(edf, sample_sources=5, source_mod=2)
 
+    # An empty graph has the kernel's (src, dst, betweenness) schema on
+    # every path: the kernel, auto past the gate, and distributed.
+    empty = spark.createDataFrame([], "src long, dst long")
+    kernel = GR.edge_betweenness(empty, method="kernel")
+    monkeypatch.setattr(GR, "MAX_DRIVER_EDGES", -1)
+    for df in (
+        kernel,
+        GR.edge_betweenness(empty, method="auto"),
+        GR.edge_betweenness(empty, method="distributed"),
+    ):
+        assert df.dtypes == [
+            ("src", "bigint"), ("dst", "bigint"), ("betweenness", "double")
+        ]
+        assert df.collect() == []
+
 
 def test_edge_betweenness_core_sized_kernel_repeats_exactly(spark):
     """The kernel runs at most one Python task per core (each Python task
