@@ -2605,10 +2605,13 @@ _DRIVER_PRIORITY = [
 def _with_pressure_release(fn, name: str = "?"):
     """Self-defence for vanilla no-release drivers (r11 verdict item 4):
     every registered query first releases the session's pinned
-    checkpoint blocks IFF they exceed half the driver heap. Each query's
-    per-round superseded blocks ARE released by the operators, but final
-    checkpointed frames (results, memos) stay pinned for the session —
-    a driver looping the full registry on a small default heap
+    checkpoint blocks IFF they exceed half the driver heap. Every
+    fixed-point loop releases the rounds it supersedes
+    (``session.checkpoint``), but a loop's final state, its setup
+    tables, the per-round frames its result reads (hyperball registers,
+    MIS/matching picks, walk frontiers, betweenness credit levels) and
+    the memos stay pinned for the session — a driver looping the full
+    registry on a small default heap
     accumulates them monotonically (measured: 141 MiB / 78 RDDs after
     13 heavy queries at sf0.01; a 217-query sweep runs to 1-2 GiB,
     death on a 1 GiB heap). On the test harness the threshold is never

@@ -39,7 +39,6 @@ beyond the union-find gate.
 
 from __future__ import annotations
 
-import threading
 from collections import defaultdict, deque
 from collections.abc import Iterable
 
@@ -54,6 +53,7 @@ from pyspark.sql.types import (
 )
 
 from inf_553_datamining_mapreduce_spark.deploy import ensure_worker_imports
+from inf_553_datamining_mapreduce_spark.session import _unpin, checkpoint
 
 # Driver-side gates: betweenness adjacency and the GN removal schedule live
 # on the driver (as in the reference); refuse silently-unbounded collects.
@@ -476,16 +476,16 @@ def edge_betweenness_distributed(
     ).localCheckpoint()
     frontier = dist
     for hop in range(1, max_hops + 1):
-        nxt = (
+        nxt = checkpoint(
             frontier.join(sym, frontier.v == sym.src)
             .select("source", F.col("dst").alias("v"))
             .distinct()
             .join(dist, ["source", "v"], "left_anti")
             .withColumn("dist", F.lit(hop))
-        ).localCheckpoint()
+        )
         if nxt.isEmpty():
             break
-        dist = dist.unionAll(nxt).localCheckpoint()
+        dist = checkpoint(dist.unionAll(nxt), dist, frontier)
         frontier = nxt
 
     t = dist.select(
@@ -516,21 +516,23 @@ def edge_betweenness_distributed(
             lvl_e = lvl_e.join(w, ["source", "head"], "left")
         else:
             lvl_e = lvl_e.withColumn("w", F.lit(None).cast("double"))
-        cred = lvl_e.select(
-            "source",
-            "tail",
-            "head",
-            (
-                (F.lit(1.0) + F.coalesce(F.col("w"), F.lit(0.0)))
-                / F.col("route")
-            ).alias("credit"),
-        ).localCheckpoint()
+        cred = checkpoint(
+            lvl_e.select(
+                "source",
+                "tail",
+                "head",
+                (
+                    (F.lit(1.0) + F.coalesce(F.col("w"), F.lit(0.0)))
+                    / F.col("route")
+                ).alias("credit"),
+            )
+        )
         credit_parts.append(cred)
-        pending = (
+        pending = checkpoint(
             cred.select("source", F.col("tail").alias("v"), "credit")
             .groupBy("source", "v")
-            .agg(F.sum("credit").alias("w"))
-            .localCheckpoint()
+            .agg(F.sum("credit").alias("w")),
+            pending,
         )
 
     all_credits = credit_parts[0]
@@ -599,9 +601,10 @@ def edge_betweenness_fixedpoint(
     Distributed shape: identical to ``edge_betweenness_distributed`` —
     frontier-join BFS, DAG membership by one join predicate, per-level
     reverse sweep; every stage is a key-partitioned join or aggregate.
-    Materialization policy: every per-round table localCheckpoints
-    eagerly. Round k's BFS plan references round k-1 TWICE (the frontier
-    join and the dist anti-join), so without LogicalRDD truncation the
+    Materialization policy: every per-round table goes through the
+    eager ``checkpoint`` (session.py). Round k's BFS plan references
+    round k-1 TWICE (the frontier join and the dist anti-join), so
+    without LogicalRDD truncation the
     plan TREE doubles per round and explain/compile blows up
     exponentially; and measured at the oracle gate, many small eager jobs
     beat one lazily-persisted mega-job (AQE compiles each round's tiny
@@ -623,14 +626,16 @@ def edge_betweenness_fixedpoint(
     ).localCheckpoint()
     dist = dist0
     frontier = dist0
+    levels = [dist0]
     for hop in range(1, max_depth + 1):
-        nxt = (
+        nxt = checkpoint(
             frontier.join(sym, frontier.v == sym.src)
             .select("source", F.col("dst").alias("v"))
             .distinct()
             .join(dist, ["source", "v"], "left_anti")
             .withColumn("dist", F.lit(hop))
-        ).localCheckpoint()
+        )
+        levels.append(nxt)
         if nxt.isEmpty():
             break
         # The union is a free narrow op over checkpointed LogicalRDD parts.
@@ -651,7 +656,7 @@ def edge_betweenness_fixedpoint(
         .select("source", "tail", "head", F.col("d_head").alias("lvl"))
     )
     route = dag.groupBy("source", "head").agg(F.count(F.lit(1)).alias("route"))
-    dagr = dag.join(route, ["source", "head"]).localCheckpoint()
+    dagr = checkpoint(dag.join(route, ["source", "head"]), *levels)
     max_lvl = dagr.agg(F.max("lvl")).first()[0]
     if max_lvl is None:
         return spark.createDataFrame(
@@ -668,18 +673,19 @@ def edge_betweenness_fixedpoint(
             F.lit(1).cast("long").alias("sigma"),
         ).localCheckpoint()
         sigma_all = sig_lvl
+        levels = [sig_lvl]
         for lvl in range(1, int(max_lvl) + 1):
             st = sig_lvl.select("source", F.col("v").alias("tail"), "sigma")
-            sig_lvl = (
+            sig_lvl = checkpoint(
                 dagr.filter(F.col("lvl") == lvl)
                 .join(st, ["source", "tail"])
                 .groupBy("source", F.col("head").alias("v"))
                 .agg(F.sum("sigma").alias("sigma"))
-                .localCheckpoint()
             )
+            levels.append(sig_lvl)
             sigma_all = sigma_all.unionAll(sig_lvl)
-        sigma_all = sigma_all.localCheckpoint()
-        dagr = (
+        sigma_all = checkpoint(sigma_all, *levels)
+        dagr = checkpoint(
             dagr.join(
                 sigma_all.select(
                     "source", F.col("v").alias("tail"),
@@ -693,8 +699,9 @@ def edge_betweenness_fixedpoint(
                     F.col("sigma").alias("sigma_head"),
                 ),
                 ["source", "head"],
-            )
-            .localCheckpoint()
+            ),
+            dagr,
+            sigma_all,
         )
         credit_expr = (
             f"(sigma_tail * (CAST({scale} AS BIGINT)"
@@ -717,18 +724,20 @@ def edge_betweenness_fixedpoint(
             lvl_e = lvl_e.join(w, ["source", "head"], "left")
         else:
             lvl_e = lvl_e.withColumn("w", F.lit(None).cast("long"))
-        cred = lvl_e.select(
-            "source",
-            "tail",
-            "head",
-            F.expr(credit_expr).alias("credit"),
-        ).localCheckpoint()
+        cred = checkpoint(
+            lvl_e.select(
+                "source",
+                "tail",
+                "head",
+                F.expr(credit_expr).alias("credit"),
+            )
+        )
         credit_parts.append(cred)
-        pending = (
+        pending = checkpoint(
             cred.select("source", F.col("tail").alias("v"), "credit")
             .groupBy("source", "v")
-            .agg(F.sum("credit").alias("w"))
-            .localCheckpoint()
+            .agg(F.sum("credit").alias("w")),
+            pending,
         )
 
     all_credits = credit_parts[0]
@@ -799,8 +808,7 @@ def connected_components(
     Arrow table, a JVM-side relation with no Python stage. Past
     ``MAX_DRIVER_EDGES`` it falls back to labelprop (same labels).
     method='labelprop': distributed min-label propagation — the scale path;
-    converges in diameter iterations, localCheckpoint per round to cut
-    lineage.
+    converges in diameter iterations, one ``checkpoint`` per round.
     method='auto': the same as 'unionfind'.
     """
     import pyarrow as pa
@@ -833,23 +841,25 @@ def connected_components(
         base = base.union(vertices.select(F.col(vertices.columns[0]).alias("id")))
     labels = base.distinct().select("id", F.col("id").alias("component"))
     labels = labels.localCheckpoint()
+    prev = None  # the round before `labels`, read by no later round
     for _ in range(max_iter):
         msgs = (
             sym.join(labels, sym.src == labels.id)
             .select(F.col("dst").alias("id"), "component")
         )
-        new_labels = (
+        new_labels = checkpoint(
             labels.unionByName(msgs)
             .groupBy("id")
-            .agg(F.min("component").alias("component"))
-        ).localCheckpoint()
+            .agg(F.min("component").alias("component")),
+            prev,
+        )
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "id")
             .filter(F.col("n.component") != F.col("o.component"))
             .count()
         )
-        labels = new_labels
+        prev, labels = labels, new_labels
         if changed == 0:
             break
     return labels
@@ -1003,8 +1013,8 @@ def pagerank(
 
     Scale shape: out-degrees are one aggregation; each iteration is one
     join + one aggregation (shuffle on vertex id, the canonical distributed
-    PageRank step), lineage cut per round with localCheckpoint. No driver
-    collection at any size.
+    PageRank step), one ``checkpoint`` per round. No driver collection at
+    any size.
     """
     # Materialize the (possibly expensive) upstream edge build exactly ONCE;
     # everything the iteration loop touches derives from this checkpoint —
@@ -1036,16 +1046,15 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("contrib").alias("s"))
         )
-        ranks = (
-            deg.join(sums, deg.id == sums.dst, "left")
-            .select(
+        ranks = checkpoint(
+            deg.join(sums, deg.id == sums.dst, "left").select(
                 "id",
                 F.expr(
                     f"CAST({base} + ({damping_pct} * coalesce(s, CAST(0 AS BIGINT)))"
                     " div 100 AS BIGINT)"
                 ).alias("rank"),
-            )
-            .localCheckpoint()
+            ),
+            ranks,
         )
     return ranks.select(F.col("id"), F.col("rank").alias("rank_fp")).orderBy("id")
 
@@ -1077,8 +1086,8 @@ def pagerank_weighted(
     Input contract: one weight per undirected pair, enforced loudly via
     :func:`_symmetrize_weighted` (the weighted-walk contract). Shape at
     scale: identical to :func:`pagerank` — one weight-sum aggregation,
-    then per iteration one edges-sized join + one keyed sum, lineage cut
-    per round.
+    then per iteration one edges-sized join + one keyed sum, one
+    ``checkpoint`` per round.
     """
     symw = _symmetrize_weighted(edges, weight_col)
     wdeg = (
@@ -1106,19 +1115,16 @@ def pagerank_weighted(
             .groupBy("dst")
             .agg(F.sum("contrib").alias("s"))
         )
-        prev = ranks
-        ranks = _checkpoint_reset_stats(
+        ranks = checkpoint(
             wdeg.join(sums, wdeg.id == sums.dst, "left").select(
                 "id",
                 F.expr(
                     f"CAST({base} + ({damping_pct} * coalesce(s, CAST(0 AS BIGINT)))"
                     " div 100 AS BIGINT)"
                 ).alias("rank"),
-            )
+            ),
+            ranks,
         )
-        release = getattr(prev, "_graft_release", None)
-        if release is not None:
-            release()
     return ranks.select(
         F.col("id"), F.col("rank").alias("rank_fp")
     ).orderBy("id")
@@ -1406,7 +1412,7 @@ def girvan_newman_fixedpoint(
     gated collect) — the grid rides as a ``k`` key through every join, so
     one plan evaluates all candidate partitions at once: per round one
     (k,v)-keyed aggregate and two (k,v)-keyed joins over the
-    grid × remaining-edges table, lineage truncated per round; modularity
+    grid × remaining-edges table, a ``checkpoint`` every other round; modularity
     is two bounded aggregates + one membership join; the argmax is a
     2-column sort of ~n_grid rows. Output: one row per community of the
     winning partition — ``(community, members_str, n_members)``.
@@ -1476,7 +1482,7 @@ def girvan_newman_fixedpoint(
         rem.select("k", F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint()
 
-    lab = ks.crossJoin(verts).select(
+    lab = lab_ck = ks.crossJoin(verts).select(
         "k", "v", F.col("v").alias("lbl")
     ).localCheckpoint()
     for r in range(label_rounds):
@@ -1510,16 +1516,16 @@ def girvan_newman_fixedpoint(
             mapping,
             (F.col("k") == F.col("mk")) & (F.col("lbl") == F.col("mv")),
         ).select("k", "v", F.col("mlbl").alias("lbl"))
-        # stats-resetting checkpoint EVERY OTHER round (r14): lab is
-        # referenced 3x per round (neighbor join, union, jump self-join),
-        # so the unchecked plan grows ~3x per round — two rounds (~9
-        # subtrees over k-sliced tables this small) evaluate faster than
-        # the extra checkpoint job they replace (measured: 8 checkpoints
-        # 5.9 s, every-2 4.6 s, every-4 — 27 subtrees — 9.3 s; the same
-        # BigInt statistics trap documented at _checkpoint_reset_stats
-        # still caps the depth).
+        # checkpoint EVERY OTHER round (r14): lab is referenced 3x per
+        # round (neighbor join, union, jump self-join), so the unchecked
+        # plan grows ~3x per round — two rounds (~9 subtrees over
+        # k-sliced tables this small) evaluate faster than the extra
+        # checkpoint job they replace (measured: 8 checkpoints 5.9 s,
+        # every-2 4.6 s, every-4 — 27 subtrees — 9.3 s; the BigInt
+        # statistics trap documented at session.checkpoint still caps
+        # the depth).
         if (r + 1) % 2 == 0 or r == label_rounds - 1:
-            lab = _checkpoint_reset_stats(lab)
+            lab = lab_ck = checkpoint(lab, lab_ck)
 
     deg0 = (
         e.select(F.col("src").alias("v"))
@@ -1587,9 +1593,8 @@ def kcore(edges: DataFrame, k: int = 20, max_rounds: int = 10) -> DataFrame:
 
     Distributed shape: every round is one degree aggregation plus two
     semi-joins on the edge list — O(E) work, no adjacency collection, so
-    unlike the betweenness kernel this has no driver-size gate. Lineage is
-    truncated per round (``localCheckpoint``) — without it each round would
-    re-evaluate the whole peel chain (the iterative-plan trap).
+    unlike the betweenness kernel this has no driver-size gate. One
+    ``checkpoint`` per round.
 
     Rounds are capped at ``max_rounds`` so an equivalent fixed-unroll SQL
     oracle exists; the early exit at the fixpoint cannot change the result
@@ -1605,15 +1610,14 @@ def kcore(edges: DataFrame, k: int = 20, max_rounds: int = 10) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= k).select("v")
-        e2 = (
+        e = checkpoint(
             e.join(keep.withColumnRenamed("v", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("v", "dst"), "dst", "left_semi")
-            .localCheckpoint()
+            .join(keep.withColumnRenamed("v", "dst"), "dst", "left_semi"),
+            e,
         )
-        n2 = e2.count()
-        if n2 == n_edges:
+        n_prev, n_edges = n_edges, e.count()
+        if n_edges == n_prev:  # a peel only drops edges: same count, same set
             break
-        e, n_edges = e2, n2
     return (
         e.select(F.col("src").alias("c"))
         .unionAll(e.select(F.col("dst").alias("c")))
@@ -1638,10 +1642,9 @@ def bfs_distances(
     adjacency collect, so there is no driver-size gate. All ``n_landmarks``
     BFS trees advance in the SAME join (the landmark column rides along),
     so the round count is the graph diameter, not diameter × landmarks.
-    Lineage is cut per round (``localCheckpoint``) — the iterative-plan
-    trap. The early exit at an empty frontier cannot change the result;
-    ``max_hops`` bounds the walk so a fixed-depth recursive-CTE oracle
-    expresses identical semantics.
+    One ``checkpoint`` per round. The early exit at an empty frontier
+    cannot change the result; ``max_hops`` bounds the walk so a
+    fixed-depth recursive-CTE oracle expresses identical semantics.
     """
     sym = (
         edges.select("src", "dst")
@@ -1668,12 +1671,12 @@ def bfs_distances(
             )
             .distinct()
         )
-        fresh = candidates.join(
-            settled, ["id", "landmark"], "left_anti"
-        ).localCheckpoint()
+        fresh = checkpoint(
+            candidates.join(settled, ["id", "landmark"], "left_anti")
+        )
         if fresh.isEmpty():
             break
-        settled = settled.unionByName(fresh).localCheckpoint()
+        settled = checkpoint(settled.unionByName(fresh), settled, frontier)
         frontier = fresh
     return settled.orderBy("landmark", "id")
 
@@ -1821,9 +1824,8 @@ def label_propagation(edges: DataFrame, rounds: int = 5) -> DataFrame:
 
     Shape at scale: each round is one join (neighbor labels), one count
     aggregate, and one per-vertex argmax window over label-count rows
-    (bounded by the vertex's distinct neighbor labels ≤ degree);
-    ``localCheckpoint`` truncates lineage per round exactly as the
-    pagerank/k-core loops do. The fixed round count makes the whole
+    (bounded by the vertex's distinct neighbor labels ≤ degree); one
+    ``checkpoint`` per round. The fixed round count makes the whole
     algorithm expressible as a depth-unrolled chained-CTE oracle — the
     ``_pagerank_oracle`` provability trick (extra rounds past a fixpoint
     are NOT the identity here, so the oracle must unroll the same count,
@@ -1848,113 +1850,27 @@ def label_propagation(edges: DataFrame, rounds: int = 5) -> DataFrame:
         # window this replaces (labels are vertex ids >= 0), without
         # the per-round sort exchange (r13 optimization round, the
         # louvain_moves rewrite applied here).
-        labels = (
+        labels = checkpoint(
             cnt.groupBy("v")
             .agg(
                 F.max(
                     F.struct(F.col("c"), (-F.col("label")).alias("lneg"))
                 ).alias("b")
             )
-            .select("v", (-F.col("b.lneg")).alias("label"))
-            .localCheckpoint()
+            .select("v", (-F.col("b.lneg")).alias("label")),
+            labels,
         )
     return labels.select(
         F.col("v").alias("c"), F.col("label").alias("community")
     ).orderBy("c")
 
 
-# Serializes the snapshot/checkpoint/diff window in _checkpoint_reset_stats:
-# two concurrent calls interleaving their registry snapshots would each
-# capture the OTHER's fresh checkpoint blocks in `pinned` and later release
-# them — unrecoverable for a lineage-truncated frame.
-_CKPT_LOCK = threading.Lock()
-
-
 def _checkpoint_reset_stats(df: DataFrame) -> DataFrame:
-    """``localCheckpoint`` that also RESETS the plan's size statistics.
-
-    ``Dataset.localCheckpoint`` truncates lineage but PRESERVES the origin
-    plan's ``sizeInBytes`` estimate, and Catalyst's size estimation
-    multiplies the two sides of every join. An iterative operator whose
-    state table joins into itself k times per round therefore compounds
-    the estimate k-fold per round — the BigInt grows to tens of
-    thousands of DIGITS within a few rounds, and the optimizer's
-    statistics pass degenerates into Toom-Cook bignum multiplication
-    that dwarfs the actual query (measured: Louvain round 8 spent 180 s
-    of driver CPU inside ``BigInteger.multiply``; the one-join-per-round
-    loops like label propagation only grow the estimate linearly, which
-    is why they never hit this). Rebuilding the Dataset from the
-    checkpointed RDD (a JVM-side Row pass, no Python round-trip) yields
-    a LogicalRDD with the DEFAULT size estimate — constant per round, so
-    round cost stays flat. The default estimate also disables compile-
-    time auto-broadcast of the state table, which is correct at scale
-    (the table is |V|-sized); AQE restores runtime broadcasts from
-    actual sizes where they fit.
-    """
-    ck = None
-    try:
-        # Private-API dependency (PySpark keeps no public handle to the
-        # JVM Dataset): if an engine upgrade renames these, fall back to
-        # the plain checkpoint — correct, just exposed to the compounding
-        # size-estimate slowdown documented above. `ck` is tracked so the
-        # fallback NEVER re-checkpoints a plan that already materialized
-        # (that would compute twice and leak the first copy's blocks for
-        # the session life — the exact leak this function exists to plug).
-        #
-        # The registry snapshot/checkpoint/diff below assumes ONE driver
-        # thread submits jobs at a time (the engine's own loops and the
-        # correctness/bench drivers are all serial); `_CKPT_LOCK` makes
-        # concurrent _checkpoint_reset_stats calls safe against EACH
-        # OTHER, but an RDD persisted by unrelated code on another thread
-        # between the two snapshots would still be mis-captured in
-        # `pinned` and destroyed by a later release — lineage-truncated
-        # checkpoint blocks are unrecoverable, so don't run foreign
-        # persist work concurrently with the iterative operators.
-        with _CKPT_LOCK:
-            jsc = df.sparkSession.sparkContext._jsc
-            before = set(dict(jsc.getPersistentRDDs()).keys())
-            ck = df.localCheckpoint()
-            # The RDD that localCheckpoint actually PERSISTS is an internal
-            # one (the physical plan's execute().map(_.copy()) — see
-            # Dataset.checkpoint in Spark source); neither `ck` nor any RDD
-            # derived from it via javaRDD() holds a handle to it, so
-            # unpersisting a derived RDD is a silent no-op (ADVICE r10,
-            # verified empirically: getPersistentRDDs() still listed the
-            # block). Diff the context's persistent-RDD registry around the
-            # eager checkpoint instead — the only new entries are this
-            # checkpoint's blocks, and unpersisting THOSE ids demonstrably
-            # drops the registry count (test_release_drops_persistent_rdds).
-            pinned = [
-                jrdd
-                for rid, jrdd in dict(jsc.getPersistentRDDs()).items()
-                if rid not in before
-            ]
-        jdf = ck._jdf
-        new_jdf = df.sparkSession._jsparkSession.createDataFrame(
-            jdf.javaRDD(), jdf.schema()
-        )
-        out = DataFrame(new_jdf, df.sparkSession)
-
-        # Handle for the caller to RELEASE the pinned blocks once this
-        # round's state is superseded: localCheckpoint blocks live for
-        # the session otherwise, and an iterative operator invoked many
-        # times in one session accumulates them until GC pressure
-        # dominates (measured round 7: repeated sf10 Louvain runs in one
-        # session degraded 13 -> 31 s with zero code change). Safe to
-        # call only AFTER the next round's eager checkpoint has
-        # materialized — a local checkpoint truncates lineage, so a
-        # released frame must never be recomputed.
-        def _release(pinned=pinned):
-            for jrdd in pinned:
-                jrdd.unpersist(False)
-
-        out._graft_release = _release
-        return out
-    except AttributeError:
-        # If the checkpoint already materialized before the private-API
-        # lookup failed, return THAT frame — re-checkpointing here would
-        # recompute the plan and permanently leak the first copy.
-        return ck if ck is not None else df.localCheckpoint()
+    """:func:`~inf_553_datamining_mapreduce_spark.session.checkpoint` with a
+    ``_graft_release()`` handle that releases the returned frame."""
+    out = checkpoint(df)
+    out._graft_release = lambda: _unpin(out)
+    return out
 
 
 def louvain(edges: DataFrame, rounds: int = 3, levels: int = 2) -> DataFrame:
@@ -1986,8 +1902,9 @@ def louvain(edges: DataFrame, rounds: int = 3, levels: int = 2) -> DataFrame:
     mapping = louvain_moves(edges, rounds=rounds).select(
         F.col("c").alias("v"), F.col("community").alias("label")
     )
+    prev = None  # the last level's checkpointed mapping
     for _ in range(levels - 1):
-        e = (
+        e = checkpoint(
             edges.select("src", "dst")
             .join(
                 mapping.select(
@@ -2007,15 +1924,16 @@ def louvain(edges: DataFrame, rounds: int = 3, levels: int = 2) -> DataFrame:
             )
             .groupBy("src", "dst")
             .agg(F.count(F.lit(1)).alias("w"))
-            .localCheckpoint()
         )
         coarse = louvain_moves(e, rounds=rounds, weight_col="w").select(
             F.col("c").alias("label"), F.col("community").alias("label2")
         )
-        mapping = (
-            mapping.join(coarse, "label")
-            .select("v", F.col("label2").alias("label"))
-            .localCheckpoint()
+        mapping = prev = checkpoint(
+            mapping.join(coarse, "label").select(
+                "v", F.col("label2").alias("label")
+            ),
+            e,
+            prev,
         )
     return mapping.select(
         F.col("v").alias("c"), F.col("label").alias("community")
@@ -2196,8 +2114,8 @@ def louvain_moves(
     the same shape as a label-propagation round), a zero-score union row
     so v's own community always competes, and a per-vertex argmax window
     bounded by the vertex's distinct neighbor communities <= degree.
-    ``localCheckpoint`` truncates lineage per round. Fixed rounds =
-    depth-unrolled chained-CTE oracle, like ``label_propagation``.
+    One ``checkpoint`` per round. Fixed rounds = depth-unrolled
+    chained-CTE oracle, like ``label_propagation``.
     """
     ew = F.col(weight_col) if weight_col else F.lit(1)
     base = edges.select("src", "dst", ew.cast("long").alias("w"))
@@ -2275,10 +2193,8 @@ def louvain_moves(
                 F.when(F.col("nlabel") == F.col("cur"), F.col("score"))
             ).alias("own_score"),
         )
-        prev = labels
-        labels = _checkpoint_reset_stats(
-            labels.join(stats, "v")
-            .select(
+        labels = checkpoint(
+            labels.join(stats, "v").select(
                 "v",
                 F.when(
                     ((F.col("v") + F.lit(i)) % 2 == 0)
@@ -2287,15 +2203,9 @@ def louvain_moves(
                 )
                 .otherwise(F.col("label"))
                 .alias("label"),
-            )
+            ),
+            labels,
         )
-        # the new round's checkpoint is eager, so the superseded round's
-        # pinned blocks can be released immediately (see
-        # _checkpoint_reset_stats) — without this, repeated Louvain calls
-        # in one session accumulate rounds x calls block sets
-        release = getattr(prev, "_graft_release", None)
-        if release is not None:
-            release()
     return labels.select(
         F.col("v").alias("c"), F.col("label").alias("community")
     ).orderBy("c")
@@ -2321,9 +2231,8 @@ def weighted_sssp(
     regions stop generating work (on an unweighted graph this degenerates
     to exactly the BFS frontier). All ``n_landmarks`` trees relax in the
     SAME join. No adjacency collect, no driver state — O(E) per round at
-    any scale. Lineage is cut per round with the stats-reset checkpoint
-    (the Louvain lesson: the min-merge self-union would otherwise compound
-    size estimates), and superseded round state is released.
+    any scale. One ``checkpoint`` per round (the min-merge self-union
+    would otherwise compound size estimates).
 
     Early exit at an empty frontier cannot change the result (a round
     that improves nothing proves a fixed point — relaxation is monotone),
@@ -2361,27 +2270,24 @@ def weighted_sssp(
             .groupBy(F.col("dst").alias("id"), "landmark")
             .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
         )
-        prev = settled
-        known = prev.select(
+        known = settled.select(
             "id", "landmark", F.col("dist").alias("_known")
         )
-        fresh = (
+        fresh = checkpoint(
             relaxed.join(known, ["id", "landmark"], "left")
             .filter(F.col("_known").isNull() | (F.col("dist") < F.col("_known")))
             .select("id", "landmark", "dist")
-            .localCheckpoint()
         )
         if fresh.isEmpty():
             break
-        settled = _checkpoint_reset_stats(
-            prev.unionByName(fresh)
+        settled = checkpoint(
+            settled.unionByName(fresh)
             .groupBy("id", "landmark")
-            .agg(F.min("dist").alias("dist"))
+            .agg(F.min("dist").alias("dist")),
+            settled,
+            frontier,
         )
         frontier = fresh
-        release = getattr(prev, "_graft_release", None)
-        if release is not None:
-            release()
     return settled.orderBy("landmark", "id")
 
 
@@ -2448,22 +2354,15 @@ def connected_components_twostar(
         .distinct()
         .localCheckpoint()
     )
+    older = None  # the round before `prev`, read by no later round
     for _ in range(max_rounds):
         prev = e
-        # stats-reset checkpoint, not the plain one: each star joins the
-        # edge set against its own groupBy-min (twice per round), so the
-        # preserved-origin size estimate would compound e^4 per round —
-        # the Louvain BigInt trap (measured: 185 s at sf1 plain vs 30 s
-        # reset). Superseded round state is released once the new round's
-        # eager checkpoint has materialized.
-        e = _checkpoint_reset_stats(star(star(e, large=True), large=False))
-        converged = (
-            e.exceptAll(prev).isEmpty() and prev.exceptAll(e).isEmpty()
-        )
-        release = getattr(prev, "_graft_release", None)
-        if release is not None:
-            release()
-        if converged:
+        # each star joins the edge set against its own groupBy-min (twice
+        # per round), so a preserved-origin size estimate would compound
+        # e^4 per round (measured: 185 s at sf1 plain vs 30 s reset).
+        e = checkpoint(star(star(e, large=True), large=False), older)
+        older = prev
+        if e.exceptAll(prev).isEmpty() and prev.exceptAll(e).isEmpty():
             break
     # converged: every edge hangs a vertex off its component root
     labels = e.groupBy(F.col("src").alias("id")).agg(
@@ -2552,17 +2451,18 @@ def minimum_spanning_forest(
             F.explode(F.array("c_src", "c_dst")).alias("c"),
             F.struct("w", "src", "dst").alias("e"),
         )
-        sel = (
+        sel = checkpoint(
             cand.groupBy("c")
             .agg(F.min("e").alias("e"))
             .select("e.src", "e.dst", "e.w")
             .distinct()
-            .localCheckpoint()
         )
         if sel.isEmpty():
             break
-        forest = sel if forest is None else forest.unionByName(sel).distinct()
-        forest = _checkpoint_reset_stats(forest)
+        forest = checkpoint(
+            sel if forest is None else forest.unionByName(sel).distinct(),
+            forest,
+        )
         # merge touching components: CC of the selection graph on
         # component labels, then relabel every vertex. The selection
         # graph carries AT MOST ONE edge per component, so it shrinks
@@ -2572,11 +2472,12 @@ def minimum_spanning_forest(
         # round-trip latency dominated, measured 90 s for a 4.4k-edge
         # sf1 graph), and beyond the gate it falls back to the two-star
         # kernel (log^2 rounds, no driver state).
-        sel_lab = (
+        sel_lab = checkpoint(
             sel.join(lab_s, "src")
             .join(lab_d, "dst")
-            .select(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
-        ).localCheckpoint()
+            .select(F.col("c_src").alias("src"), F.col("c_dst").alias("dst")),
+            sel,
+        )
         if sel_lab.count() <= MAX_DRIVER_EDGES:
             cc = connected_components(sel_lab, method="unionfind")
         else:
@@ -2584,10 +2485,12 @@ def minimum_spanning_forest(
         merged = cc.select(
             F.col("id").alias("c"), F.col("component").alias("c_new")
         )
-        labels = _checkpoint_reset_stats(
+        labels = checkpoint(
             labels.join(merged, "c", "left").select(
                 "v", F.coalesce("c_new", "c").alias("c")
-            )
+            ),
+            labels,
+            sel_lab,
         )
     if forest is None:
         return base.filter(F.lit(False)).select("src", "dst", "w")
@@ -2629,6 +2532,10 @@ def maximal_independent_set(edges: DataFrame, max_rounds: int = 12) -> DataFrame
     breaking kernel (scheduling, coloring seeds) that belongs in any
     graph suite at this scale.
     """
+    if max_rounds < 1:
+        raise ValueError(
+            f"maximal_independent_set needs max_rounds >= 1, got {max_rounds}"
+        )
     base = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     sym = (
         base.unionAll(
@@ -2651,14 +2558,13 @@ def maximal_independent_set(edges: DataFrame, max_rounds: int = 12) -> DataFrame
             .groupBy("src")
             .agg(F.min(F.struct("h", F.col("dst").alias("id"))).alias("m"))
         )
-        win = (
+        win = checkpoint(
             rem.join(nb_min, rem.id == nb_min.src, "left")
             .filter(
                 F.col("m").isNull()
                 | (F.struct("h", "id") < F.col("m"))
             )
             .select("id")
-            .localCheckpoint()
         )
         picked.append(win.select("id", F.lit(i).alias("mis_round")))
         killed = win.unionAll(
@@ -2666,19 +2572,15 @@ def maximal_independent_set(edges: DataFrame, max_rounds: int = 12) -> DataFrame
                 F.col("dst").alias("id")
             )
         ).distinct()
-        prev_rem, prev_e = rem, e
-        rem = _checkpoint_reset_stats(rem.join(killed, "id", "left_anti"))
+        rem = checkpoint(rem.join(killed, "id", "left_anti"), rem)
         if rem.isEmpty():
             break
-        e = _checkpoint_reset_stats(
+        e = checkpoint(
             e.join(rem.select(F.col("id").alias("src")), "src", "left_semi")
             .join(rem.select(F.col("id").alias("dst")), "dst", "left_semi")
-            .select("src", "dst")
+            .select("src", "dst"),
+            e,
         )
-        for df in (prev_rem, prev_e):
-            release = getattr(df, "_graft_release", None)
-            if release is not None:
-                release()
     out = picked[0]
     for p in picked[1:]:
         out = out.unionByName(p)
@@ -2731,12 +2633,11 @@ def maximal_matching(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
         )
         ms = vmin.select(F.col("v").alias("src"), F.col("mk").alias("mk_src"))
         md = vmin.select(F.col("v").alias("dst"), F.col("mk").alias("mk_dst"))
-        won = (
+        won = checkpoint(
             e.join(ms, "src")
             .join(md, "dst")
             .filter((key == F.col("mk_src")) & (key == F.col("mk_dst")))
             .select("src", "dst")
-            .localCheckpoint()
         )
         if won.isEmpty():
             break
@@ -2746,14 +2647,11 @@ def maximal_matching(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
             .unionAll(won.select(F.col("dst").alias("v")))
             .distinct()
         )
-        prev_e = e
-        e = _checkpoint_reset_stats(
+        e = checkpoint(
             e.join(matched_v.select(F.col("v").alias("src")), "src", "left_anti")
-            .join(matched_v.select(F.col("v").alias("dst")), "dst", "left_anti")
+            .join(matched_v.select(F.col("v").alias("dst")), "dst", "left_anti"),
+            e,
         )
-        release = getattr(prev_e, "_graft_release", None)
-        if release is not None:
-            release()
         if e.isEmpty():
             break
     if not picked:
@@ -2831,7 +2729,7 @@ def hyperball_neighborhood(edges: DataFrame, max_rounds: int = 6) -> DataFrame:
     # no recomputation; state is (rounds+1) x V x <=256 small rows).
     round_regs = [regs]
     for _ in range(1, max_rounds + 1):
-        regs = _checkpoint_reset_stats(
+        regs = checkpoint(
             regs.unionByName(
                 sym.join(
                     regs.select(F.col("id").alias("dst"), "bucket", "reg"),
@@ -2907,6 +2805,8 @@ def palette_coloring(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
     the Pregel-class companion kernel the reference's graph family
     (SURVEY.md §2.G) stops short of.
     """
+    if max_rounds < 1:
+        raise ValueError(f"palette_coloring needs max_rounds >= 1, got {max_rounds}")
     base = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     sym = (
         base.unionAll(
@@ -2941,7 +2841,7 @@ def palette_coloring(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
                 .distinct()
             )
             avail = avail.join(used, ["id", "k"], "left_anti")
-        cand = (
+        cand = checkpoint(
             avail.withColumn("rn", F.row_number().over(w_rank) - 1)
             .withColumn("n_avail", F.count(F.lit(1)).over(w_cnt))
             .filter(
@@ -2956,7 +2856,6 @@ def palette_coloring(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
                 )
             )
             .select("id", "h", F.col("k").alias("color"))
-            .localCheckpoint()
         )
         losers = (
             sym.join(
@@ -2988,27 +2887,22 @@ def palette_coloring(edges: DataFrame, max_rounds: int = 8) -> DataFrame:
             .select(F.col("src").alias("id"))
             .distinct()
         )
-        keep = (
-            cand.join(losers, "id", "left_anti")
-            .select(
+        keep = checkpoint(
+            cand.join(losers, "id", "left_anti").select(
                 "id",
                 F.col("color").cast("int").alias("color"),
                 F.lit(t).cast("int").alias("color_round"),
-            )
-            .localCheckpoint()
+            ),
+            cand,
         )
-        colored = (
-            keep
-            if colored is None
-            else _checkpoint_reset_stats(colored.unionByName(keep))
+        colored = checkpoint(
+            keep if colored is None else colored.unionByName(keep), colored
         )
-        prev_unc = uncolored
-        uncolored = _checkpoint_reset_stats(
-            uncolored.join(keep.select("id"), "id", "left_anti")
+        uncolored = checkpoint(
+            uncolored.join(keep.select("id"), "id", "left_anti"),
+            uncolored,
+            keep,
         )
-        release = getattr(prev_unc, "_graft_release", None)
-        if release is not None:
-            release()
         if uncolored.isEmpty():
             break
     return colored.orderBy("id")
@@ -3063,15 +2957,16 @@ def hits_scores(
             # 8.6 s at sf0.1; this shape 36.2-42.4 / 8.1; checkpointing
             # the raw sums instead 45.2 / 7.8 — lazy-auth wins where it
             # matters (the big SF) and ties at bench scale.
-            auth = auth.localCheckpoint()
+            auth = checkpoint(auth)
         hraw = e.join(auth, "dst").groupBy("src").agg(
             F.sum("auth").alias("raw")
         )
         hmax = hraw.agg(F.max("raw").alias("m"))
-        hub = (
-            hraw.crossJoin(F.broadcast(hmax))
-            .select("src", F.expr(f"(raw * {scale}) div m").alias("hub"))
-            .localCheckpoint()
+        hub = checkpoint(
+            hraw.crossJoin(F.broadcast(hmax)).select(
+                "src", F.expr(f"(raw * {scale}) div m").alias("hub")
+            ),
+            hub,
         )
     return (
         hub.select(
@@ -3321,11 +3216,10 @@ def random_walk_corpus(
             ),
             F.col("deg"),
         )
-        frontier = (
+        frontier = checkpoint(
             frontier.join(ranked, frontier.vertex == ranked.src)
             .filter(F.col("rk") == pick)
             .select("walk_id", "start_id", F.col("dst").alias("vertex"))
-            .localCheckpoint()
         )
         out = out.unionByName(
             frontier.select(
@@ -3410,10 +3304,9 @@ def weighted_walk_corpus(
                 F.lit(s),
             )
         )
-        frontier = (
+        frontier = checkpoint(
             weighted_pick(cand, ["walk_id", "start_id"], "ew", "dst", draw)
             .select("walk_id", "start_id", F.col("dst").alias("vertex"))
-            .localCheckpoint()
         )
         out = out.unionByName(
             frontier.select(
@@ -3617,17 +3510,15 @@ def node2vec_walk_corpus(
                 F.lit(s),
             )
         )
-        frontier = (
+        frontier = checkpoint(
             weighted_pick(
                 cand, ["walk_id", "start_id"], "wgt", "dst", draw
-            )
-            .select(
+            ).select(
                 "walk_id",
                 "start_id",
                 F.col("vertex").alias("prev"),
                 F.col("dst").alias("vertex"),
             )
-            .localCheckpoint()
         )
         out = out.unionByName(
             frontier.select(
@@ -3986,10 +3877,9 @@ def sgns_embeddings(
     # ONE state table holds both sides — (v, ei, eo) — so each epoch
     # materializes a single checkpoint (the long-format original paid
     # two, and the first array form still paid two, each re-deriving
-    # the gradient join pipeline). _checkpoint_reset_stats for the
-    # release hook: each epoch supersedes the previous state, and
-    # without the handle its blocks stayed pinned for the session.
-    state = _checkpoint_reset_stats(
+    # the gradient join pipeline); each epoch's checkpoint releases the
+    # state it supersedes.
+    state = checkpoint(
         vocab.select(
             "v", _init_arr("i").alias("ei"), _init_arr("o").alias("eo")
         )
@@ -4126,8 +4016,7 @@ def sgns_embeddings(
             )
         )
 
-        prev = state
-        state = _checkpoint_reset_stats(
+        state = checkpoint(
             state.join(delta, "v", "left").select(
                 "v",
                 F.array(
@@ -4148,11 +4037,9 @@ def sgns_embeddings(
                         for d in range(dim)
                     ]
                 ).alias("eo"),
-            )
+            ),
+            state,
         )
-        release = getattr(prev, "_graft_release", None)
-        if release is not None:
-            release()
 
     def _kind(col_name: str, kind: str) -> DataFrame:
         return state.select(
@@ -4335,16 +4222,15 @@ def personalized_pagerank(
             .groupBy("dst")
             .agg(F.sum("contrib").alias("s"))
         )
-        ranks = (
-            seeded_deg.join(sums, seeded_deg.id == sums.dst, "left")
-            .select(
+        ranks = checkpoint(
+            seeded_deg.join(sums, seeded_deg.id == sums.dst, "left").select(
                 "id",
                 F.expr(
                     f"CAST((CASE WHEN seed IS NOT NULL THEN {seed_mass} "
                     f"ELSE 0 END) + ({damping_pct} * coalesce(s, "
                     "CAST(0 AS BIGINT))) div 100 AS BIGINT)"
                 ).alias("rank"),
-            )
-            .localCheckpoint()
+            ),
+            ranks,
         )
     return ranks.select("id", F.col("rank").alias("rank_fp")).orderBy("id")

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from inf_553_datamining_mapreduce_spark.operators.dedup import cosine_similarity
+from inf_553_datamining_mapreduce_spark.session import checkpoint
 
 def label_centroids(embeddings: DataFrame) -> DataFrame:
     """Per-label centroid of the embedding column — the k-means update step
@@ -524,6 +525,7 @@ def _lloyd_loop(
         .localCheckpoint()
     )
     counts = None
+    older = None  # centroids two rounds back: not even `counts` reads them
     for _ in range(iters):
         assigned = vecs.crossJoin(
             F.broadcast(_centroid_array(cent))
@@ -568,12 +570,11 @@ def _lloyd_loop(
                 ).alias("c_new")
             )
         )
-        cent = (
-            cent.join(upd, "cluster_id", "left")
-            .select(
+        older, cent = cent, checkpoint(
+            cent.join(upd, "cluster_id", "left").select(
                 "cluster_id", F.coalesce("c_new", "c").alias("c")
-            )
-            .localCheckpoint()
+            ),
+            older,
         )
     return vecs, cent, counts
 
@@ -756,10 +757,11 @@ def _pq_codebooks(
                 ).alias("c_new")
             )
         )
-        cb = (
-            cb.join(upd, ["sub", "code_id"], "left")
-            .select("sub", "code_id", F.coalesce("c_new", "c").alias("c"))
-            .localCheckpoint()
+        cb = checkpoint(
+            cb.join(upd, ["sub", "code_id"], "left").select(
+                "sub", "code_id", F.coalesce("c_new", "c").alias("c")
+            ),
+            cb,
         )
     return cb
 
@@ -1396,6 +1398,7 @@ def hashed_feature_principal_component(
         F.col("id").cast("int").alias("j"),
         F.lit(scale).cast("long").alias("v"),
     )
+    v_ck = None
     for _ in range(iters):
         u = (
             mq.join(v, "j")
@@ -1403,13 +1406,12 @@ def hashed_feature_principal_component(
             .agg(F.sum(F.col("mq") * F.col("v")).alias("u"))
         )
         umax = u.agg(F.max(F.abs("u")).alias("umax"))
-        v = (
-            u.crossJoin(F.broadcast(umax))
-            .select(
+        v = v_ck = checkpoint(
+            u.crossJoin(F.broadcast(umax)).select(
                 F.col("i").alias("j"),
                 F.expr(f"(u * {scale}) DIV umax").alias("v"),
-            )
-            .localCheckpoint()
+            ),
+            v_ck,
         )
     sgn = (
         v.filter(F.col("v") != 0)
@@ -1776,6 +1778,7 @@ def quality_classifier_fixedpoint(
         F.col("id").cast("int").alias("dim"),
         F.lit(0).cast("long").alias("w"),
     )
+    w_ck = None
     for _ in range(epochs):
         zy = (
             fy.join(F.broadcast(w), "dim")
@@ -1800,9 +1803,8 @@ def quality_classifier_fixedpoint(
             .groupBy("dim")
             .agg(F.sum(F.col("value") * F.col("err")).alias("g"))
         )
-        w = (
-            w.join(grad, "dim", "left")
-            .select(
+        w = w_ck = checkpoint(
+            w.join(grad, "dim", "left").select(
                 "dim",
                 (
                     F.col("w")
@@ -1810,8 +1812,8 @@ def quality_classifier_fixedpoint(
                         F.expr(f"g div {lr_den}L"), F.lit(0).cast("long")
                     )
                 ).alias("w"),
-            )
-            .localCheckpoint()
+            ),
+            w_ck,
         )
     return w.select("dim", F.col("w").alias("weight_fp")).orderBy("dim")
 

@@ -16,6 +16,8 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from inf_553_datamining_mapreduce_spark.session import checkpoint
+
 # Fixed stopword list for quality scoring — deliberately tiny and stable so
 # the DuckDB oracle can inline it.
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
@@ -1508,8 +1510,8 @@ def bpe_learn(
     include overlapping occurrences, as in the paper), one 1-row argmax
     collect (the algorithm's synchronization point, same bounded-scalar
     pattern as Louvain's ``m``), and one pure-projection fold applying
-    the winner. The vocabulary is localCheckpoint'd each round so the
-    plan doesn't nest ``n_merges`` HOF folds. At 100 TB the corpus is
+    the winner. The vocabulary goes through ``checkpoint`` each round
+    so the plan doesn't nest ``n_merges`` HOF folds. At 100 TB the corpus is
     read ONCE (the word-count aggregate); iterations cost
     O(vocab x avg word length) each — the shape HF ``tokenizers`` and
     subword-nmt both use, here distributed.
@@ -1542,11 +1544,14 @@ def bpe_learn(
             break
         lhs, rhs, cnt = best[0]["lhs"], best[0]["rhs"], int(best[0]["pair_count"])
         merges.append((rank, lhs, rhs, lhs + rhs, cnt))
-        words = words.select(
-            "word",
-            "cnt",
-            F.split(_bpe_merge_fold(lhs, rhs), " ").alias("syms"),
-        ).localCheckpoint()
+        words = checkpoint(
+            words.select(
+                "word",
+                "cnt",
+                F.split(_bpe_merge_fold(lhs, rhs), " ").alias("syms"),
+            ),
+            words,
+        )
     merges_df = spark.createDataFrame(
         merges,
         "merge_rank int, lhs string, rhs string, merged string, pair_count long",
@@ -1649,9 +1654,7 @@ def apply_bpe_merges(
             syms_expr = F.split(
                 _bpe_merge_fold(lhs, rhs, syms_expr), " "
             )
-        words = words.select(
-            "word", syms_expr.alias("syms")
-        ).localCheckpoint()
+        words = checkpoint(words.select("word", syms_expr.alias("syms")), words)
     sized = words.select("word", F.size("syms").alias("n_syms"))
     per_doc = (
         documents.select(

@@ -1,7 +1,10 @@
-"""SparkSession factory.
+"""SparkSession factory and the session's block bookkeeping: the one
+checkpoint-and-release step of every fixed-point loop (:func:`checkpoint`)
+and the between-query release (:func:`release_session_blocks`).
 
-Defaults are tuned for the test harness (``local[32]``, 128 GiB single JVM)
-but every setting is cluster-sane: AQE handles skew and partition coalescing
+Defaults are tuned for a single local JVM (``local[$SPARK_GRAFT_CPUS]``,
+all cores when unset; an 8g driver, ``$SPARK_GRAFT_DRIVER_MEM``) but every
+setting is cluster-sane: AQE handles skew and partition coalescing
 at any scale, Arrow keeps the Python<->JVM boundary vectorized for the few
 Pandas-UDF kernels, and shuffle partitions are sized for the local harness
 (on a real cluster AQE's coalescing makes the initial number mostly
@@ -12,7 +15,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CONFIGS: dict[str, str] = {
     # Adaptive query execution: runtime re-planning, skew-join splitting,
@@ -73,18 +77,69 @@ def register_release_hook(fn) -> None:
         _RELEASE_HOOKS.append(fn)
 
 
+def checkpoint(df: DataFrame, *superseded: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint`` of ``df`` with its size statistics reset,
+    then release of the ``superseded`` checkpointed frames — the one
+    checkpoint-and-release step of every fixed-point loop.
+
+    Lineage: a loop's round k reads round k-1, so without truncation the
+    plan grows per round. Size statistics: ``localCheckpoint`` keeps the
+    origin plan's ``sizeInBytes``, and Catalyst multiplies the sides of
+    every join, so a state table that joins into itself k times per
+    round compounds the estimate k-fold per round (measured: Louvain
+    round 8 spent 180 s of driver CPU in ``BigInteger.multiply``).
+    Rebuilding the frame over the checkpoint's own RDD gives the default
+    estimate, constant per round; it also stops compile-time broadcasts
+    of the (|V|-sized) state, which AQE restores at run time where the
+    actual size fits.
+
+    Release: a local checkpoint's plan is a ``LogicalRDD`` whose RDD is
+    the one the block manager pins, for the session, until unpersisted
+    (``DataFrame.unpersist`` cannot reach it). Each ``superseded`` frame
+    (a checkpoint made here or by ``localCheckpoint``; ``None``, a loop's
+    first round, is skipped) is unpersisted through its own plan, and
+    only after ``df``'s checkpoint has materialized: a released frame
+    has no lineage left, so nothing may read it again. The returned
+    frame stays pinned until it is passed as ``superseded`` to a later
+    call or :func:`release_session_blocks` runs.
+    """
+    ck = df.localCheckpoint()
+    try:
+        jck = ck._jdf
+        out = DataFrame(
+            df.sparkSession._jsparkSession.internalCreateDataFrame(
+                jck.queryExecution().logical().rdd(), jck.schema(), False
+            ),
+            df.sparkSession,
+        )
+    except Py4JError:
+        # Private JVM API renamed: keep the materialized checkpoint, which
+        # releases the same way but keeps the origin size estimate.
+        out = ck
+    for old in superseded:
+        if old is not None:
+            _unpin(old)
+    return out
+
+
+def _unpin(frame: DataFrame) -> None:
+    """Unpersist the RDD under a checkpointed frame's ``LogicalRDD`` plan."""
+    frame._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def release_session_blocks(spark: SparkSession, blocking: bool = True) -> int:
     """Release every RDD block pinned in ``spark``'s block manager and
     clear the SQL cache — the supported way to return a long-lived
     session to its fresh-start memory state between queries.
 
     Why this exists: the iterative operators checkpoint per-round state
-    with ``localCheckpoint`` (via ``_checkpoint_reset_stats``,
-    ``operators/graph.py``), and local-checkpoint blocks live for the
+    with :func:`checkpoint`, and local-checkpoint blocks live for the
     SESSION unless explicitly unpersisted — ``DataFrame.unpersist``
     cannot reach them (they are RDD-level persists, not cache-manager
-    entries). A driver looping over many registry queries in one vanilla
-    session therefore accumulates pinned blocks until a later allocation
+    entries). Each loop releases the rounds it supersedes, but the
+    frames its result still reads (final state, setup tables, memos)
+    stay pinned. A driver looping over many registry queries in one
+    vanilla session therefore accumulates pinned blocks until a later allocation
     spike (measured round 10: the Brandes per-level sweep OOMed at query
     position 28 on the default heap, behind ~157 leftover checkpoint
     RDDs, while passing isolated) lands on a full heap. Calling this
@@ -142,13 +197,15 @@ def maybe_release_under_pressure(
     """Call :func:`release_session_blocks` IFF pinned RDD storage exceeds
     ``fraction`` of the driver's max heap — the self-defence a vanilla
     no-release driver needs to survive many heavy iterative queries in
-    one session (the round-11 failure mode: per-round superseded blocks
-    ARE released by the operators, but each query's FINAL checkpointed
-    frames stay pinned until something frees them).
+    one session (the round-11 failure mode: every fixed-point loop
+    releases the rounds it supersedes through :func:`checkpoint`, but
+    each query's final state, setup tables, the per-round frames its
+    result reads and the engine memos stay pinned until something frees
+    them).
 
     Designed to be called at QUERY BOUNDARIES (the entry registry wraps
-    every registered query with it): on the 128 GiB test harness the
-    threshold is never reached and behavior is byte-identical to before;
+    every registered query with it): on an 8g driver running one query
+    at a time the threshold is not reached and behavior is unchanged;
     on a small default heap it fires exactly when the alternative is a
     JVM death. Same safety contract as ``release_session_blocks`` — a
     caller that builds many query DataFrames first and collects them

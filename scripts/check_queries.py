@@ -6,7 +6,10 @@ the query's Spark time and the jobs it ran, read from its job groups:
 ``build_jobs`` are the eager jobs inside the query function (schema
 inference, memo builds, checkpoints), ``execute_jobs`` those of the final
 ``toPandas``, and ``tasks`` the tasks of all their stages — an over-split
-Python stage shows here. Usage:
+Python stage shows here. Each query starts from a released session
+(``release_session_blocks``) and ``pinned`` counts the RDDs it left
+pinned. ``$SPARK_GRAFT_CPUS`` sets the core count (``local[N]``, default
+8). Usage:
 
     python scripts/check_queries.py q1 q2 ...  [--sf /root/testdata/sf0.01]
 """
@@ -36,9 +39,11 @@ def main() -> None:
 
     import __spark_entry__ as em
     from inf_553_datamining_mapreduce_spark.schemas import TESTDATA_TABLES
+    from inf_553_datamining_mapreduce_spark.session import release_session_blocks
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("check-queries")
         .getOrCreate()
     )
@@ -64,6 +69,7 @@ def main() -> None:
     bad = 0
     for i, name in enumerate(args):
         group = f"check:{i}:{name}"
+        release_session_blocks(spark)
         t0 = time.perf_counter()
         df = in_group(f"{group}:build", lambda: queries[name](spark, sf_dir))
         spark_pdf = in_group(f"{group}:execute", df.toPandas)
@@ -80,7 +86,8 @@ def main() -> None:
         }
         tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stage_ids)
         counts = " ".join(f"{p}_jobs={len(ids)}" for p, ids in job_ids.items())
-        counts += f" tasks={tasks}"
+        pinned = len(dict(sc._jsc.getPersistentRDDs()))
+        counts += f" tasks={tasks} pinned={pinned}"
         if name not in oracles:
             print(f"{name}: NO ORACLE rows={len(spark_pdf)} {dt}s {counts}")
             continue

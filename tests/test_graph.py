@@ -2784,3 +2784,101 @@ def test_edge_betweenness_core_sized_kernel_repeats_exactly(spark):
     second = edge_betweenness(edf).collect()
     assert len(first) == len(pairs)
     assert [tuple(r) for r in first] == [tuple(r) for r in second]
+
+
+# A 12-edge path whose weights follow the ruler sequence (1 + trailing
+# zeros of i + 1): Boruvka merges it pairwise, so the spanning forest
+# needs three rounds, and a k=2 peel drops its two end edges per round.
+_RULER_PATH = [(i, i + 1, ((i + 1) & -(i + 1)).bit_length()) for i in range(12)]
+
+
+def _round_loops():
+    from inf_553_datamining_mapreduce_spark.operators import graph as G
+    from inf_553_datamining_mapreduce_spark.operators.similarity import (
+        kmeans_fixedpoint,
+    )
+    from inf_553_datamining_mapreduce_spark.operators.text import bpe_learn
+
+    def edges(spark):
+        return spark.createDataFrame(_RULER_PATH, "src long, dst long, shared long")
+
+    def docs(spark):
+        texts = ["low lower lowest", "newer newest new", "wide wider widest"]
+        return spark.createDataFrame(
+            [(i, t, "src0") for i, t in enumerate(texts)],
+            "doc_id long, text string, source string",
+        )
+
+    def vectors(spark):
+        rows = [(i, [float((i * 7) % 5), float((i * 3) % 4)]) for i in range(12)]
+        return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+    return {
+        "pagerank": lambda s, r: G.pagerank(edges(s), iterations=r),
+        "pagerank_weighted": lambda s, r: G.pagerank_weighted(edges(s), iterations=r),
+        "label_propagation": lambda s, r: G.label_propagation(edges(s), rounds=r),
+        "kcore": lambda s, r: G.kcore(edges(s), k=2, max_rounds=r),
+        "louvain_moves": lambda s, r: G.louvain_moves(edges(s), rounds=r),
+        "palette_coloring": lambda s, r: G.palette_coloring(edges(s), max_rounds=r),
+        "minimum_spanning_forest": lambda s, r: G.minimum_spanning_forest(
+            edges(s).withColumnRenamed("shared", "w"), max_rounds=r
+        ),
+        "hits_scores": lambda s, r: G.hits_scores(edges(s), iters=r),
+        "kmeans_fixedpoint": lambda s, r: kmeans_fixedpoint(vectors(s), k=3, iters=r),
+        "bpe_learn": lambda s, r: bpe_learn(docs(s), n_merges=r),
+    }
+
+
+def _pinned(spark) -> int:
+    return len(dict(spark.sparkContext._jsc.getPersistentRDDs()))
+
+
+@pytest.mark.parametrize("name", sorted(_round_loops()))
+def test_fixed_point_loops_release_superseded_rounds(spark, name):
+    """Each loop releases every round it supersedes, so what stays pinned
+    after it returns does not grow with the round count, and the result
+    (which reads only the frames left pinned) still collects."""
+    from inf_553_datamining_mapreduce_spark.session import release_session_blocks
+
+    run = _round_loops()[name]
+    left = []
+    for rounds in (1, 2):
+        release_session_blocks(spark)
+        out = run(spark, rounds)
+        left.append(_pinned(spark))
+        for df in out if isinstance(out, tuple) else (out,):
+            assert df.collect()
+    assert left[0] == left[1], f"{name}: pinned after 1 and 2 rounds: {left}"
+
+
+def test_checkpoint_falls_back_to_plain_checkpoint(spark, monkeypatch):
+    """When the JVM call that resets the size statistics is missing, the
+    already-materialized checkpoint is returned: right rows, one pinned
+    RDD (no second checkpoint), and it still releases as superseded."""
+    from py4j.protocol import Py4JError
+
+    from inf_553_datamining_mapreduce_spark.session import (
+        checkpoint,
+        release_session_blocks,
+    )
+
+    def missing(*_args):
+        raise Py4JError("internalCreateDataFrame does not exist in the JVM")
+
+    release_session_blocks(spark)
+    monkeypatch.setattr(spark._jsparkSession, "internalCreateDataFrame", missing)
+    ck = checkpoint(spark.range(50).selectExpr("id * 2 AS v"))
+    assert _pinned(spark) == 1
+    assert sorted(r.v for r in ck.collect()) == list(range(0, 100, 2))
+    monkeypatch.undo()
+    nxt = checkpoint(ck.selectExpr("v + 1 AS v"), ck)
+    assert _pinned(spark) == 1
+    assert sorted(r.v for r in nxt.collect()) == list(range(1, 100, 2))
+
+
+@pytest.mark.parametrize("op", ["palette_coloring", "maximal_independent_set"])
+def test_round_capped_graph_ops_reject_zero_rounds(spark, op):
+    from inf_553_datamining_mapreduce_spark.operators import graph as G
+
+    with pytest.raises(ValueError, match="max_rounds >= 1"):
+        getattr(G, op)(_edges_df(spark, [(0, 1), (1, 2)]), max_rounds=0)
