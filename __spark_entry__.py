@@ -70,8 +70,8 @@ def golden_only() -> dict[str, str]:
             "credit sums as edge_betweenness_customers, summed in yet "
             "another (join-schedule) order; proven vs the CSR kernel "
             "to 1e-9 relative (test_graph) and by the green "
-            "fixed-point rows running the identical distributed shape "
-            "in integer arithmetic"
+            "fixed-point rows, which run the same BFS, DAG and credit "
+            "sweep code in integer arithmetic"
         ),
     }
 
@@ -460,8 +460,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # fixed-point rows. Like the other two float kernels its IEEE
         # credit sums are accumulation-order-dependent (golden_only):
         # proven vs the CSR kernel to 1e-9 relative (test_graph), and
-        # its hash-oracled twins are the fixed-point rows — the same
-        # distributed shape in integer arithmetic.
+        # its hash-oracled twins are the fixed-point rows, which run the
+        # same code (graph.py _bfs_levels, _shortest_path_dag,
+        # _reverse_credit_sweep) with an integer credit expression.
         return G.edge_betweenness_distributed(
             _customer_graph_edges(spark, sf), source_mod=10
         )

@@ -39,10 +39,11 @@ beyond the union-find gate.
 
 from __future__ import annotations
 
+import functools
 from collections import defaultdict, deque
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.sql.types import (
@@ -409,6 +410,130 @@ def edge_betweenness(
     )
 
 
+# ---------------------------------------------------------------------------
+# Distributed shortest-path core (Betweenness.scala:56-116 as joins): one
+# multi-source BFS, one shortest-path DAG build, one reverse credit sweep,
+# shared by bfs_distances and the float and fixed-point betweenness paths
+# ---------------------------------------------------------------------------
+
+def _symmetric_edges(edges: DataFrame) -> DataFrame:
+    """Both directions of every edge as ``(src, dst)`` longs, pinned: the
+    BFS joins it once per hop."""
+    e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
+    return e.unionAll(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint()
+
+
+def _bfs_levels(
+    sym: DataFrame, sources: DataFrame, max_hops: int
+) -> tuple[DataFrame, list[DataFrame]]:
+    """Level-synchronous BFS from every ``source`` row of ``sources`` at
+    once over the symmetric edge table ``sym``, for at most ``max_hops``
+    hops.
+
+    Each hop is one frontier join (the source column rides along, so the
+    hop count is the depth, not depth × sources) plus an anti-join
+    against the vertices settled so far, and checkpoints only the new
+    level. The settled set is the lazy union of the checkpointed levels,
+    a narrow op, so no hop copies it. The walk stops at the hop cap or at
+    an empty level, which is released at once.
+
+    Returns ``(settled, levels)``: ``settled`` is ``(source, v, dist)``
+    over all levels, and ``levels`` are the pinned non-empty levels,
+    level 0 first, so the depth reached is ``len(levels) - 1``. The
+    caller releases ``levels`` once it has materialized what reads
+    ``settled``.
+    """
+    level = sources.select(
+        "source", F.col("source").alias("v"), F.lit(0).alias("dist")
+    ).localCheckpoint()
+    settled, levels = level, [level]
+    for hop in range(1, max_hops + 1):
+        level = checkpoint(
+            level.join(sym, level.v == sym.src)
+            .select("source", F.col("dst").alias("v"))
+            .distinct()
+            .join(settled, ["source", "v"], "left_anti")
+            .withColumn("dist", F.lit(hop))
+        )
+        if level.isEmpty():
+            _unpin(level)
+            break
+        levels.append(level)
+        settled = settled.unionAll(level)
+    return settled, levels
+
+
+def _shortest_path_dag(
+    sym: DataFrame, settled: DataFrame, levels: list[DataFrame]
+) -> DataFrame:
+    """The shortest-path DAG of every BFS tree in ``settled``, checkpointed,
+    then the BFS ``levels`` released: ``(source, head, tail, lvl, route)``,
+    one row per edge tail → head with ``dist(head) == dist(tail) + 1`` (one
+    join predicate), ``lvl`` the head's level and ``route`` the head's DAG
+    in-degree (``Betweenness.scala``'s predecessor-edge count)."""
+    t = settled.select(
+        "source", F.col("v").alias("tail"), F.col("dist").alias("d_tail")
+    )
+    hd = settled.select(
+        "source", F.col("v").alias("head"), F.col("dist").alias("d_head")
+    )
+    dag = (
+        sym.select(F.col("src").alias("tail"), F.col("dst").alias("head"))
+        .join(t, "tail")
+        .join(hd, ["source", "head"])
+        .filter(F.col("d_head") == F.col("d_tail") + 1)
+        .select("source", "tail", "head", F.col("d_head").alias("lvl"))
+    )
+    route = dag.groupBy("source", "head").agg(F.count(F.lit(1)).alias("route"))
+    return checkpoint(dag.join(route, ["source", "head"]), *levels)
+
+
+def _reverse_credit_sweep(
+    dagr: DataFrame, depth: int, credit: str, total: Column, *superseded: DataFrame
+) -> DataFrame:
+    """The reverse sweep over the DAG ``dagr`` of depth ``depth`` >= 1,
+    deepest level first: each level's edges get ``credit``, a SQL
+    expression over the DAG columns and ``w``, the credit mass arriving at
+    the head from one level deeper (NULL when none does). Contributions to
+    level L-1 come only from level-L edges, so the carried state is one
+    ``(source, head, w)`` aggregate over the previous level's credits, read
+    once and left lazy; each level's credits are checkpointed (they feed
+    the next level and the result).
+
+    Returns ``(src, dst, total)``, the caller's aggregate ``total`` of the
+    ``credit`` column over every source's credits of each edge src < dst,
+    checkpointed; then ``dagr``, the credit levels and ``superseded`` are
+    released, so the operator leaves only its result pinned.
+    """
+    parts: list[DataFrame] = []
+    for lvl in range(depth, 0, -1):
+        lvl_e = dagr.filter(F.col("lvl") == lvl)
+        if parts:
+            w = (
+                parts[-1]
+                .groupBy("source", F.col("tail").alias("head"))
+                .agg(F.sum("credit").alias("w"))
+            )
+            lvl_e = lvl_e.join(w, ["source", "head"], "left")
+        else:
+            lvl_e = lvl_e.withColumn("w", F.lit(None))
+        parts.append(
+            checkpoint(
+                lvl_e.select("source", "tail", "head", F.expr(credit).alias("credit"))
+            )
+        )
+    credits = functools.reduce(DataFrame.unionAll, parts).select(
+        F.least("tail", "head").alias("src"),
+        F.greatest("tail", "head").alias("dst"),
+        "credit",
+    )
+    return checkpoint(
+        credits.groupBy("src", "dst").agg(total), dagr, *parts, *superseded
+    )
+
+
 def edge_betweenness_distributed(
     edges: DataFrame,
     sample_sources: int | None = None,
@@ -423,13 +548,15 @@ def edge_betweenness_distributed(
     ``(src, dst, betweenness)``; the arithmetic is identical, so results
     match the kernel to float round-off (different summation order only).
 
-    Formulation: multi-source level-synchronous BFS via frontier joins
-    (diameter rounds, the ``bfs_distances`` idiom), shortest-path-DAG
-    membership as one join predicate (``d_head == d_tail + 1``), ``route``
-    as a DAG in-degree aggregate, and the reverse sweep level-by-level —
-    each level is one join + one aggregate, and contributions to level
-    L-1 vertices come ONLY from level-L edges, so the carried state is a
-    single (source, vertex, weight) table per level.
+    Distributed shape: the shared shortest-path core — multi-source
+    frontier BFS (``_bfs_levels``, at most ``max_hops`` hops), the DAG
+    with ``route`` (``_shortest_path_dag``) and the level-by-level
+    reverse sweep (``_reverse_credit_sweep``) with the float credit
+    ``(1 + w) / route`` — the same code as ``edge_betweenness_fixedpoint``,
+    in double arithmetic. Materialization policy: theirs; the BFS levels
+    are released once the DAG materializes, and the DAG, the credit
+    levels and the symmetric edge table once the checkpointed result
+    does, so only the result stays pinned.
 
     Cost: every table is per-(source, x), i.e. s×E rows — the explicit
     Brandes-Pich estimator budget. ``sample_sources`` draws a
@@ -448,10 +575,7 @@ def edge_betweenness_distributed(
     if sample_sources is not None and source_mod is not None:
         raise ValueError("pass sample_sources OR source_mod, not both")
     spark = edges.sparkSession
-    e = edges.select("src", "dst")
-    sym = e.unionAll(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
+    sym = _symmetric_edges(edges)
     active = sym.select(F.col("src").alias("id")).distinct()
     n_active = active.count()
     if n_active == 0:
@@ -471,83 +595,16 @@ def edge_betweenness_distributed(
         ).limit(sample_sources)
     sources = src_df.select(F.col("id").alias("source"))
 
-    dist = sources.select(
-        "source", F.col("source").alias("v"), F.lit(0).alias("dist")
-    ).localCheckpoint()
-    frontier = dist
-    for hop in range(1, max_hops + 1):
-        nxt = checkpoint(
-            frontier.join(sym, frontier.v == sym.src)
-            .select("source", F.col("dst").alias("v"))
-            .distinct()
-            .join(dist, ["source", "v"], "left_anti")
-            .withColumn("dist", F.lit(hop))
-        )
-        if nxt.isEmpty():
-            break
-        dist = checkpoint(dist.unionAll(nxt), dist, frontier)
-        frontier = nxt
-
-    t = dist.select(
-        "source", F.col("v").alias("tail"), F.col("dist").alias("d_tail")
-    )
-    hd = dist.select(
-        "source", F.col("v").alias("head"), F.col("dist").alias("d_head")
-    )
-    dag = (
-        sym.select(F.col("src").alias("tail"), F.col("dst").alias("head"))
-        .join(t, "tail")
-        .join(hd, ["source", "head"])
-        .filter(F.col("d_head") == F.col("d_tail") + 1)
-        .select("source", "tail", "head", F.col("d_head").alias("lvl"))
-    )
-    route = dag.groupBy("source", "head").agg(F.count(F.lit(1)).alias("route"))
-    dagr = dag.join(route, ["source", "head"]).localCheckpoint()
-    max_lvl = dagr.agg(F.max("lvl")).first()[0]
-    if max_lvl is None:
+    settled, levels = _bfs_levels(sym, sources, max_hops)
+    if len(levels) == 1:
         return spark.createDataFrame([], _RESULT_SCHEMA)
-
-    pending = None  # (source, v, w): credit mass arriving from one level deeper
-    credit_parts = []
-    for lvl in range(int(max_lvl), 0, -1):
-        lvl_e = dagr.filter(F.col("lvl") == lvl)
-        if pending is not None:
-            w = pending.select("source", F.col("v").alias("head"), "w")
-            lvl_e = lvl_e.join(w, ["source", "head"], "left")
-        else:
-            lvl_e = lvl_e.withColumn("w", F.lit(None).cast("double"))
-        cred = checkpoint(
-            lvl_e.select(
-                "source",
-                "tail",
-                "head",
-                (
-                    (F.lit(1.0) + F.coalesce(F.col("w"), F.lit(0.0)))
-                    / F.col("route")
-                ).alias("credit"),
-            )
-        )
-        credit_parts.append(cred)
-        pending = checkpoint(
-            cred.select("source", F.col("tail").alias("v"), "credit")
-            .groupBy("source", "v")
-            .agg(F.sum("credit").alias("w")),
-            pending,
-        )
-
-    all_credits = credit_parts[0]
-    for part in credit_parts[1:]:
-        all_credits = all_credits.unionAll(part)
-    return (
-        all_credits.select(
-            F.least("tail", "head").alias("src"),
-            F.greatest("tail", "head").alias("dst"),
-            "credit",
-        )
-        .groupBy("src", "dst")
-        .agg((F.sum("credit") * F.lit(scale) / F.lit(2.0)).alias("betweenness"))
-        .orderBy("src", "dst")
-    )
+    return _reverse_credit_sweep(
+        _shortest_path_dag(sym, settled, levels),
+        len(levels) - 1,
+        "(1.0D + coalesce(w, 0.0D)) / route",
+        (F.sum("credit") * F.lit(scale) / F.lit(2.0)).alias("betweenness"),
+        sym,
+    ).orderBy("src", "dst")
 
 
 def edge_betweenness_fixedpoint(
@@ -598,75 +655,55 @@ def edge_betweenness_fixedpoint(
       the depth-bounded neighborhoods it runs on (overflow would need a
       ~1e4-path-multiplicity DAG over a ~1e6-vertex subtree).
 
-    Distributed shape: identical to ``edge_betweenness_distributed`` —
-    frontier-join BFS, DAG membership by one join predicate, per-level
-    reverse sweep; every stage is a key-partitioned join or aggregate.
-    Materialization policy: every per-round table goes through the
-    eager ``checkpoint`` (session.py). Round k's BFS plan references
-    round k-1 TWICE (the frontier join and the dist anti-join), so
-    without LogicalRDD truncation the
-    plan TREE doubles per round and explain/compile blows up
-    exponentially; and measured at the oracle gate, many small eager jobs
-    beat one lazily-persisted mega-job (AQE compiles each round's tiny
-    plan instead of one O(depth²)-nested one).
+    Distributed shape: the shared shortest-path core of
+    ``edge_betweenness_distributed`` — ``_bfs_levels`` (at most
+    ``max_depth`` hops), ``_shortest_path_dag`` and
+    ``_reverse_credit_sweep`` — with the integer credit expression; every
+    stage is a key-partitioned join or aggregate. Materialization
+    policy: every per-level table goes through the eager ``checkpoint``
+    (session.py). A level's plan reads the level before it twice (the
+    frontier join and the settled anti-join), so without LogicalRDD
+    truncation the plan TREE doubles per level and explain/compile blows
+    up exponentially; and measured at the oracle gate, many small eager
+    jobs beat one lazily-persisted mega-job (AQE compiles each level's
+    tiny plan instead of one O(depth²)-nested one). The BFS levels are
+    released once the DAG materializes and the σ levels once
+    ``sigma_all`` does. The DAG, the credit levels and the symmetric edge
+    table (which the σ sweep re-reads through ``sources``) are released
+    once the checkpointed result materializes, so only the result stays
+    pinned.
     """
+    credits = {
+        "equal_split": (
+            f"(CAST({scale} AS BIGINT) + coalesce(w, CAST(0 AS BIGINT)))"
+            " div route"
+        ),
+        "brandes": (
+            f"(sigma_tail * (CAST({scale} AS BIGINT)"
+            " + coalesce(w, CAST(0 AS BIGINT)))) div sigma_head"
+        ),
+    }
+    if rule not in credits:
+        raise ValueError(f"unknown rule {rule!r}")
     spark = edges.sparkSession
-    e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    sym = e.unionAll(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    active = sym.select(F.col("src").alias("id")).distinct()
-    src_df = active
+    sym = _symmetric_edges(edges)
+    src_df = sym.select(F.col("src").alias("id")).distinct()
     if source_mod is not None:
-        src_df = active.filter(F.col("id") % source_mod == 0)
+        src_df = src_df.filter(F.col("id") % source_mod == 0)
     sources = src_df.select(F.col("id").alias("source"))
 
-    dist0 = sources.select(
-        "source", F.col("source").alias("v"), F.lit(0).alias("dist")
-    ).localCheckpoint()
-    dist = dist0
-    frontier = dist0
-    levels = [dist0]
-    for hop in range(1, max_depth + 1):
-        nxt = checkpoint(
-            frontier.join(sym, frontier.v == sym.src)
-            .select("source", F.col("dst").alias("v"))
-            .distinct()
-            .join(dist, ["source", "v"], "left_anti")
-            .withColumn("dist", F.lit(hop))
-        )
-        levels.append(nxt)
-        if nxt.isEmpty():
-            break
-        # The union is a free narrow op over checkpointed LogicalRDD parts.
-        dist = dist.unionAll(nxt)
-        frontier = nxt
-
-    t = dist.select(
-        "source", F.col("v").alias("tail"), F.col("dist").alias("d_tail")
-    )
-    hd = dist.select(
-        "source", F.col("v").alias("head"), F.col("dist").alias("d_head")
-    )
-    dag = (
-        sym.select(F.col("src").alias("tail"), F.col("dst").alias("head"))
-        .join(t, "tail")
-        .join(hd, ["source", "head"])
-        .filter(F.col("d_head") == F.col("d_tail") + 1)
-        .select("source", "tail", "head", F.col("d_head").alias("lvl"))
-    )
-    route = dag.groupBy("source", "head").agg(F.count(F.lit(1)).alias("route"))
-    dagr = checkpoint(dag.join(route, ["source", "head"]), *levels)
-    max_lvl = dagr.agg(F.max("lvl")).first()[0]
-    if max_lvl is None:
+    settled, levels = _bfs_levels(sym, sources, max_depth)
+    depth = len(levels) - 1
+    if depth == 0:
         return spark.createDataFrame(
             [], "src long, dst long, credit_sum_fp long"
         )
+    dagr = _shortest_path_dag(sym, settled, levels)
 
     if rule == "brandes":
         # Forward σ sweep: shortest-path counts level by level over the
         # DAG (σ_source = 1; σ_head = Σ σ_tail over in-edges). One join +
-        # one aggregate per level, checkpointed like the BFS rounds.
+        # one aggregate per level, checkpointed like the BFS levels.
         sig_lvl = sources.select(
             "source",
             F.col("source").alias("v"),
@@ -674,7 +711,7 @@ def edge_betweenness_fixedpoint(
         ).localCheckpoint()
         sigma_all = sig_lvl
         levels = [sig_lvl]
-        for lvl in range(1, int(max_lvl) + 1):
+        for lvl in range(1, depth + 1):
             st = sig_lvl.select("source", F.col("v").alias("tail"), "sigma")
             sig_lvl = checkpoint(
                 dagr.filter(F.col("lvl") == lvl)
@@ -703,56 +740,10 @@ def edge_betweenness_fixedpoint(
             dagr,
             sigma_all,
         )
-        credit_expr = (
-            f"(sigma_tail * (CAST({scale} AS BIGINT)"
-            " + coalesce(w, CAST(0 AS BIGINT)))) div sigma_head"
-        )
-    elif rule == "equal_split":
-        credit_expr = (
-            f"(CAST({scale} AS BIGINT) + coalesce(w, CAST(0 AS BIGINT)))"
-            " div route"
-        )
-    else:
-        raise ValueError(f"unknown rule {rule!r}")
 
-    pending = None  # (source, v, w): integer credit mass from one level down
-    credit_parts = []
-    for lvl in range(int(max_lvl), 0, -1):
-        lvl_e = dagr.filter(F.col("lvl") == lvl)
-        if pending is not None:
-            w = pending.select("source", F.col("v").alias("head"), "w")
-            lvl_e = lvl_e.join(w, ["source", "head"], "left")
-        else:
-            lvl_e = lvl_e.withColumn("w", F.lit(None).cast("long"))
-        cred = checkpoint(
-            lvl_e.select(
-                "source",
-                "tail",
-                "head",
-                F.expr(credit_expr).alias("credit"),
-            )
-        )
-        credit_parts.append(cred)
-        pending = checkpoint(
-            cred.select("source", F.col("tail").alias("v"), "credit")
-            .groupBy("source", "v")
-            .agg(F.sum("credit").alias("w")),
-            pending,
-        )
-
-    all_credits = credit_parts[0]
-    for part in credit_parts[1:]:
-        all_credits = all_credits.unionAll(part)
-    return (
-        all_credits.select(
-            F.least("tail", "head").alias("src"),
-            F.greatest("tail", "head").alias("dst"),
-            "credit",
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("credit").alias("credit_sum_fp"))
-        .orderBy("src", "dst")
-    )
+    return _reverse_credit_sweep(
+        dagr, depth, credits[rule], F.sum("credit").alias("credit_sum_fp"), sym
+    ).orderBy("src", "dst")
 
 
 # ---------------------------------------------------------------------------
@@ -1637,48 +1628,36 @@ def bfs_distances(
     frontier expansion — the landmark-distance primitive behind graph
     embeddings and closeness estimates.
 
-    Distributed shape: each hop is ONE shuffle join (frontier ⋈ edges) plus
-    an anti-join against the settled set — O(E) per round, never an
-    adjacency collect, so there is no driver-size gate. All ``n_landmarks``
-    BFS trees advance in the SAME join (the landmark column rides along),
-    so the round count is the graph diameter, not diameter × landmarks.
-    One ``checkpoint`` per round. The early exit at an empty frontier
-    cannot change the result; ``max_hops`` bounds the walk so a
-    fixed-depth recursive-CTE oracle expresses identical semantics.
+    Distributed shape: the BFS of the distributed betweenness paths
+    (``_bfs_levels``) with the landmarks as sources — each hop is ONE
+    shuffle join (frontier ⋈ edges) plus an anti-join against the settled
+    levels, O(E) per round, never an adjacency collect, so there is no
+    driver-size gate. All ``n_landmarks`` BFS trees advance in the SAME
+    join, so the round count is the graph diameter, not diameter ×
+    landmarks. Materialization policy: one ``checkpoint`` per level;
+    the result is checkpointed once, which releases the levels and the
+    symmetric edge table, so what stays pinned does not grow with hops.
+    The early exit at an empty level cannot change the result;
+    ``max_hops`` bounds the walk so a fixed-depth recursive-CTE oracle
+    expresses identical semantics.
     """
-    sym = (
-        edges.select("src", "dst")
-        .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .localCheckpoint()
-    )
+    sym = _symmetric_edges(edges)
     landmarks = (
-        sym.select(F.col("src").alias("id"))
+        sym.select(F.col("src").alias("source"))
         .distinct()
-        .orderBy("id")
+        .orderBy("source")
         .limit(n_landmarks)
     )
-    settled = landmarks.select(
-        "id", F.col("id").alias("landmark"), F.lit(0).cast("long").alias("dist")
-    ).localCheckpoint()
-    frontier = settled
-    for hop in range(1, max_hops + 1):
-        candidates = (
-            frontier.join(sym, frontier.id == sym.src)
-            .select(
-                F.col("dst").alias("id"),
-                "landmark",
-                F.lit(hop).cast("long").alias("dist"),
-            )
-            .distinct()
-        )
-        fresh = checkpoint(
-            candidates.join(settled, ["id", "landmark"], "left_anti")
-        )
-        if fresh.isEmpty():
-            break
-        settled = checkpoint(settled.unionByName(fresh), settled, frontier)
-        frontier = fresh
-    return settled.orderBy("landmark", "id")
+    settled, levels = _bfs_levels(sym, landmarks, max_hops)
+    return checkpoint(
+        settled.select(
+            F.col("v").alias("id"),
+            F.col("source").alias("landmark"),
+            F.col("dist").cast("long"),
+        ),
+        sym,
+        *levels,
+    ).orderBy("landmark", "id")
 
 
 def link_prediction_scores(

@@ -8,8 +8,13 @@ inference, memo builds, checkpoints), ``execute_jobs`` those of the final
 ``toPandas``, and ``tasks`` the tasks of all their stages — an over-split
 Python stage shows here. Each query starts from a released session
 (``release_session_blocks``) and ``pinned`` counts the RDDs it left
-pinned. ``$SPARK_GRAFT_CPUS`` sets the core count (``local[N]``, default
-8). Usage:
+pinned. That count reads ``getPersistentRDDs``, a weak-valued map: a
+checkpoint no DataFrame reaches any more (e.g. an operator's internals
+once a memo has checkpointed its result) stays counted until a JVM GC
+collects its RDD, after which the context cleaner unpersists its
+blocks, so such frames make ``pinned`` vary from run to run.
+``$SPARK_GRAFT_CPUS`` sets the core count (``local[N]``, default 8).
+Usage:
 
     python scripts/check_queries.py q1 q2 ...  [--sf /root/testdata/sf0.01]
 """
@@ -42,9 +47,15 @@ def main() -> None:
     from inf_553_datamining_mapreduce_spark.session import release_session_blocks
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    # The status tracker keeps only spark.ui.retained{Jobs,Stages} (1000
+    # each by default), so a long run would lose the stages it counts.
+    # The console progress bar's carriage-return frames garble the lines.
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("check-queries")
+        .config("spark.ui.retainedJobs", "1000000")
+        .config("spark.ui.retainedStages", "1000000")
+        .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -536,8 +536,10 @@ def test_fixedpoint_betweenness_matches_float_kernel(spark):
 def test_fixedpoint_betweenness_source_mod_subsets_sources(spark):
     """source_mod must restrict BFS sources deterministically: on a path
     graph 0-1-2-3, mod 2 keeps sources {0, 2} and credits only their
-    shortest-path trees."""
+    shortest-path trees; under a hop cap the float distributed path
+    agrees with it."""
     from inf_553_datamining_mapreduce_spark.operators.graph import (
+        edge_betweenness_distributed,
         edge_betweenness_fixedpoint,
     )
 
@@ -557,6 +559,27 @@ def test_fixedpoint_betweenness_source_mod_subsets_sources(spark):
         (1, 2): 4 * scale,
         (2, 3): 2 * scale,
     }
+
+    # On a path longer than the hop cap, the float distributed path and
+    # the fixed-point twin truncate the BFS at the same depth. The float
+    # path scales its sampled credits by n_active / n_sampled (8 / 4).
+    path = spark.createDataFrame([(i, i + 1) for i in range(7)], ["src", "dst"])
+    for hops in (2, 3):
+        fp = {
+            (r["src"], r["dst"]): r["credit_sum_fp"] * (8 / 4) / (2 * scale)
+            for r in edge_betweenness_fixedpoint(
+                path, max_depth=hops, scale=scale, source_mod=2
+            ).collect()
+        }
+        flt = {
+            (r["src"], r["dst"]): r["betweenness"]
+            for r in edge_betweenness_distributed(
+                path, max_hops=hops, source_mod=2
+            ).collect()
+        }
+        assert set(flt) == set(fp), hops
+        for k, v in fp.items():
+            assert abs(flt[k] - v) <= 1e-5 * abs(v), (hops, k, v, flt[k])
 
 
 def test_triangle_counts_orientation_invariant(spark):
@@ -2826,6 +2849,9 @@ def _round_loops():
         "hits_scores": lambda s, r: G.hits_scores(edges(s), iters=r),
         "kmeans_fixedpoint": lambda s, r: kmeans_fixedpoint(vectors(s), k=3, iters=r),
         "bpe_learn": lambda s, r: bpe_learn(docs(s), n_merges=r),
+        "bfs_distances": lambda s, r: G.bfs_distances(
+            edges(s), n_landmarks=2, max_hops=r
+        ),
     }
 
 
