@@ -20,16 +20,21 @@ search, text analysis, multimodal column plumbing, and windowed / streaming
 event analytics.
 """
 
-from inf_553_datamining_mapreduce_spark.session import (
-    get_spark,
-    maybe_release_under_pressure,
-    register_release_hook,
-    release_session_blocks,
-)
-
+# Lazy exports (PEP 562): the worker daemon runs as
+# ``python -m inf_553_datamining_mapreduce_spark.worker_daemon``, which
+# imports this package first. Importing ``session`` here would import
+# pyspark before the daemon has chosen where pyspark loads from.
 __all__ = [
     "get_spark",
     "release_session_blocks",
     "register_release_hook",
     "maybe_release_under_pressure",
 ]
+
+
+def __getattr__(name: str):
+    if name in __all__:
+        from inf_553_datamining_mapreduce_spark import session
+
+        return getattr(session, name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -3,12 +3,14 @@
 Kernels built on ``mapInPandas`` / RDD ``flatMap`` reference functions in
 this package; cloudpickle serializes importable module functions BY
 REFERENCE, so executor Python workers must be able to import the package.
-When the engine is driven by an external harness whose working directory is
-elsewhere (the correctness driver does exactly this), the package directory
-is not on the workers' ``sys.path`` — ship it explicitly via ``addPyFile``.
 
-On a real cluster the same call distributes the zip to every executor, so
-this is the correct deployment mechanism at any scale, not a local hack.
+Local sessions built by ``get_spark`` put the engine root on the workers'
+``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``), so their workers import
+the package from the engine root, compiled, and nothing is shipped. Every
+other session ships a zip of the package via ``addPyFile``: a vanilla
+session built by an external harness whose working directory is elsewhere
+(the correctness driver does exactly this), and any cluster, where the
+same call distributes the zip to every executor.
 """
 
 from __future__ import annotations
@@ -23,8 +25,8 @@ _FLAG = "_inf553_engine_pyfile_added"
 
 
 def ensure_worker_imports(spark: SparkSession) -> None:
-    """Idempotently add a zip of this package to the session's Python path
-    (driver AND executors). Call before creating any Python-side kernel."""
+    """Idempotently make this package importable by the session's Python
+    workers. Call before creating any Python-side kernel."""
     sc = spark.sparkContext
     if getattr(sc, _FLAG, False):
         return
@@ -32,12 +34,13 @@ def ensure_worker_imports(spark: SparkSession) -> None:
 
     pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
     root = os.path.dirname(pkg_dir)
-    tmpdir = tempfile.mkdtemp(prefix="inf553_pyfiles_")
-    zip_path = shutil.make_archive(
-        os.path.join(tmpdir, "inf553_engine"),
-        "zip",
-        root_dir=root,
-        base_dir=os.path.basename(pkg_dir),
-    )
-    sc.addPyFile(zip_path)
+    if root not in sc.environment.get("PYTHONPATH", "").split(os.pathsep):
+        tmpdir = tempfile.mkdtemp(prefix="inf553_pyfiles_")
+        zip_path = shutil.make_archive(
+            os.path.join(tmpdir, "inf553_engine"),
+            "zip",
+            root_dir=root,
+            base_dir=os.path.basename(pkg_dir),
+        )
+        sc.addPyFile(zip_path)
     setattr(sc, _FLAG, True)

@@ -216,9 +216,12 @@ def son_frequent_itemsets(
             .filter(F.col("support") >= support)
         )
         # Materialize now (result size <= candidate gate, small) so the
-        # basket cache can be dropped before returning; localCheckpoint also
-        # cuts lineage so downstream actions never re-run the phases.
-        return result.localCheckpoint(eager=True)
+        # basket cache and the candidate broadcast can be dropped before
+        # returning; localCheckpoint also cuts lineage so downstream
+        # actions never re-run the phases.
+        out = result.localCheckpoint(eager=True)
+        bc.unpersist()
+        return out
     finally:
         b.unpersist()
 

@@ -31,7 +31,8 @@ Spark-first shape: graph = two DataFrames (edges with src < dst, optional
 vertices). Edge building is explode + self-equi-join (never the reference's
 O(V^2) constant-key cross join, ``Betweenness.scala:27-30``). The per-source
 BFS fans out over sources with a broadcast adjacency, one task per core —
-the reference's parallelization, minus the closure-capture anti-pattern.
+the reference's parallelization, minus the closure-capture anti-pattern —
+or runs on the driver when its whole work is under one task's fixed cost.
 Driver-side state (adjacency, removal schedule) is gated by explicit size
 checks; components offer a distributed label-propagation path for graphs
 beyond the union-find gate.
@@ -59,6 +60,19 @@ from inf_553_datamining_mapreduce_spark.session import _unpin, checkpoint
 # Driver-side gates: betweenness adjacency and the GN removal schedule live
 # on the driver (as in the reference); refuse silently-unbounded collects.
 MAX_DRIVER_EDGES = 2_000_000
+
+
+# Work, in element-steps of #sources × (V + 2E), below which the kernel's
+# slices run on the driver. The driver spends 32-78 ns per element-step
+# (4-core host, idle to loaded), so the bound is 0.13-0.31 s of work, about
+# the fixed cost of running the kernel as Python tasks at all (broadcast,
+# dispatch, result fetch): a 160-vertex, 6,008-edge-slot graph (9.9e5)
+# took 0.14-0.21 s with its collect on the driver and 0.24-0.35 s
+# distributed over warm workers. The paper's MovieLens graph (160
+# sources, 6,252 directed edges: 1.0e6) runs on the driver; the sf0.01
+# customer graph (1,425 sources, 33,882 directed edges: 5.0e7; 1.6-1.8 s
+# on the driver vs 0.8-0.9 s over 4 cores) is distributed.
+DRIVER_KERNEL_WORK = 4_000_000
 
 
 class _DriverGated(ValueError):
@@ -267,16 +281,29 @@ def _csr_credit_kernel(sources, ids, indptr, indices, edge_credit) -> None:
             np.add.at(edge_credit, e_idx, credit)
 
 
+def _slice_credits(srcs: list[int], csr):
+    """One slice's credits, both directions of every edge folded into its
+    undirected slot: ``n_slots`` float64 partials."""
+    import numpy as np
+
+    ids, indptr, indices, slot, n_slots = csr
+    edge_credit = np.zeros(len(indices), dtype=np.float64)
+    _csr_credit_kernel(srcs, ids, indptr, indices, edge_credit)
+    return np.bincount(slot, weights=edge_credit, minlength=n_slots)
+
+
 def _kernel_betweenness(
     edges: DataFrame,
     vertices: DataFrame | None,
     sample_sources: int | None,
     seed: int = 17,
 ):
-    """The broadcast-CSR kernel of :func:`edge_betweenness`, returned on
-    the driver as three numpy arrays ``(src, dst, betweenness)``: src <
-    dst, sorted by (src, dst), edges with zero total credit absent.
-    Raises ``_DriverGated`` beyond the ``MAX_DRIVER_EDGES`` gate."""
+    """The CSR kernel of :func:`edge_betweenness`, returned on the driver
+    as three numpy arrays ``(src, dst, betweenness)``: src < dst, sorted
+    by (src, dst), edges with zero total credit absent. Its slices run on
+    the driver below ``DRIVER_KERNEL_WORK``, else one Python task each
+    over a broadcast CSR. Raises ``_DriverGated`` beyond the
+    ``MAX_DRIVER_EDGES`` gate."""
     import numpy as np
 
     spark = edges.sparkSession
@@ -315,24 +342,22 @@ def _kernel_betweenness(
         np.minimum(tail, indices) * n + np.maximum(tail, indices),
         return_inverse=True,
     )
-    ensure_worker_imports(spark)
-    bc = spark.sparkContext.broadcast((ids, indptr, indices, slot, len(keys)))
-
-    def per_slice(srcs: list[int]):
-        import numpy as _np
-
-        ids_l, indptr_l, indices_l, slot_l, n_slots = bc.value
-        edge_credit = _np.zeros(len(indices_l), dtype=_np.float64)
-        _csr_credit_kernel(srcs, ids_l, indptr_l, indices_l, edge_credit)
-        return _np.bincount(slot_l, weights=edge_credit, minlength=n_slots)
-
+    csr = (ids, indptr, indices, slot, len(keys))
+    sc = spark.sparkContext
     source_idx = [pos[v] for v in active]
-    n_slices = min(len(source_idx), spark.sparkContext.defaultParallelism)
+    n_slices = min(len(source_idx), sc.defaultParallelism)
     slices = [source_idx[i::n_slices] for i in range(n_slices)]
-    partials = (
-        spark.sparkContext.parallelize(slices, n_slices).map(per_slice).collect()
-    )
-    bc.unpersist()
+    if len(source_idx) * (n + len(indices)) < DRIVER_KERNEL_WORK:
+        partials = [_slice_credits(srcs, csr) for srcs in slices]
+    else:
+        ensure_worker_imports(spark)
+        bc = sc.broadcast(csr)
+        partials = (
+            sc.parallelize(slices, n_slices)
+            .map(lambda srcs: _slice_credits(srcs, bc.value))
+            .collect()
+        )
+        bc.unpersist()
     total = np.zeros(len(keys), dtype=np.float64)
     for part in partials:
         total += part
@@ -357,16 +382,20 @@ def edge_betweenness(
     the sorted sources are dealt round-robin into
     ``min(#sources, defaultParallelism)`` slices (round-robin, not
     contiguous ranges, so id-correlated BFS cost spreads evenly); each
-    slice runs the CSR/numpy kernel over a broadcast adjacency and returns
-    ONE float64 partial per undirected edge, both directions folded in the
-    worker. The driver adds the partials in slice order and applies
-    ``scale / 2``, so repeated runs give bit-identical doubles; edges with
-    zero total credit are absent. No row shuffle: driver memory is
-    P × E × 8 B for P slices and E edges — 64 MB at the 2M-edge gate on 4
-    cores. The stage is sized to cores because each Python task costs
-    ~0.25 s of fixed worker set-up regardless of its work (measured on a
-    4-core host), while a source's BFS costs about O(V + E), so splitting
-    further buys little balance and pays that cost per extra task.
+    slice runs the CSR/numpy kernel and returns ONE float64 partial per
+    undirected edge, both directions folded in. The driver adds the
+    partials in slice order and applies ``scale / 2``, so repeated runs
+    give bit-identical doubles; edges with zero total credit are absent.
+    When the whole kernel's work, #sources × (V + 2E) element-steps, is
+    under ``DRIVER_KERNEL_WORK`` (about one Python task's fixed cost), the
+    driver runs the same slices itself, in the same order, so the doubles
+    are those of the distributed path; no job runs after the collect.
+    Otherwise each slice is one Python task over a broadcast adjacency.
+    No row shuffle: driver memory is P × E × 8 B for P slices and E
+    edges — 64 MB at the 2M-edge gate on 4 cores. The stage is sized to
+    cores: every Python task still pays a fixed dispatch and
+    serialization cost whatever its work, while a source's BFS costs
+    about O(V + E), so splitting further buys little balance.
 
     ``sample_sources``: the 100-TB path. Exact betweenness is O(V·E); a
     uniform source sample of size s scales per-source credits by V/s — the

@@ -8,7 +8,10 @@ setting is cluster-sane: AQE handles skew and partition coalescing
 at any scale, Arrow keeps the Python<->JVM boundary vectorized for the few
 Pandas-UDF kernels, and shuffle partitions are sized for the local harness
 (on a real cluster AQE's coalescing makes the initial number mostly
-irrelevant as long as it is high enough).
+irrelevant as long as it is high enough). RDD and SQL Python jobs share
+one worker pool. Local masters alone also get the engine's worker daemon
+(``LOCAL_WORKER_CONFIGS``, ``worker_daemon.py``): workers load compiled
+pyspark and skip the per-task archive rescans of the stock daemon.
 """
 
 from __future__ import annotations
@@ -26,6 +29,15 @@ DEFAULT_CONFIGS: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for all pandas interchange (mapInPandas / applyInPandas / toPandas).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # One Python worker pool per session. Spark keys its worker daemons by
+    # the workers' environment, and the SQL runners (mapInPandas and the
+    # Pandas UDFs) add SPARK_SIMPLIFIED_TRACEBACK to it when this is on, so
+    # the first SQL Python job after an RDD one started a second daemon
+    # and a second set of workers (local[4], engine daemon: that job's
+    # first mapInPandas took 2.8-3.4 s with two pools, 2.6-3.0 s with
+    # one; the stock daemon's start alone is ~1.2 s). Off, errors keep
+    # pyspark's own frames in the traceback.
+    "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled": "false",
     # Local-harness shuffle width; AQE coalesces down when partitions are tiny.
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
     # Broadcast anything under 64 MiB — the dimension tables (region, nation,
@@ -61,6 +73,17 @@ DEFAULT_CONFIGS: dict[str, str] = {
     "spark.ui.showConsoleProgress": "false",
 }
 
+# Python workers of local sessions: started by the engine's daemon, which
+# loads pyspark from its compiled copy and skips the per-task archive
+# rescans (see worker_daemon.py). The engine root on the workers' path
+# lets the daemon, and every kernel, import the engine from any working
+# directory. Local only: on a cluster the daemon would have to be
+# importable on the executors before any ``--py-files`` arrive.
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+LOCAL_WORKER_CONFIGS: dict[str, str] = {
+    "spark.python.daemon.module": "inf_553_datamining_mapreduce_spark.worker_daemon",
+    "spark.executorEnv.PYTHONPATH": _ENGINE_ROOT,
+}
 
 # Callables invoked by release_session_blocks AFTER the Spark-level
 # release — modules with session-lifetime driver-side caches holding
@@ -278,6 +301,8 @@ def get_spark(
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONFIGS)
+    if master == "local" or master.startswith("local["):
+        conf.update(LOCAL_WORKER_CONFIGS)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -13,6 +13,9 @@ checkpoint no DataFrame reaches any more (e.g. an operator's internals
 once a memo has checkpointed its result) stays counted until a JVM GC
 collects its RDD, after which the context cleaner unpersists its
 blocks, so such frames make ``pinned`` vary from run to run.
+``py_daemons`` counts the Python worker daemons the JVM runs after the
+query: Spark starts one per distinct worker environment, each with its
+own workers.
 ``$SPARK_GRAFT_CPUS`` sets the core count (``local[N]``, default 8).
 Usage:
 
@@ -45,6 +48,7 @@ def main() -> None:
     import __spark_entry__ as em
     from inf_553_datamining_mapreduce_spark.schemas import TESTDATA_TABLES
     from inf_553_datamining_mapreduce_spark.session import release_session_blocks
+    from inf_553_datamining_mapreduce_spark.worker_daemon import python_daemons
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
     # The status tracker keeps only spark.ui.retained{Jobs,Stages} (1000
@@ -98,7 +102,7 @@ def main() -> None:
         tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stage_ids)
         counts = " ".join(f"{p}_jobs={len(ids)}" for p, ids in job_ids.items())
         pinned = len(dict(sc._jsc.getPersistentRDDs()))
-        counts += f" tasks={tasks} pinned={pinned}"
+        counts += f" tasks={tasks} pinned={pinned} py_daemons={python_daemons(spark)}"
         if name not in oracles:
             print(f"{name}: NO ORACLE rows={len(spark_pdf)} {dt}s {counts}")
             continue

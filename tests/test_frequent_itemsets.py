@@ -80,6 +80,34 @@ def test_son_partition_without_frequent_itemsets_is_empty(spark):
     assert son_frequent_itemsets(baskets, 2, num_partitions=1).collect() == []
 
 
+def test_son_releases_its_candidate_broadcast(spark, monkeypatch):
+    """Phase 2's candidate broadcast is unpersisted once the result's
+    checkpoint has materialized; the result stays readable."""
+    from pyspark import Broadcast
+
+    sc = spark.sparkContext
+    made, released = [], []
+    broadcast, unpersist = sc.broadcast, Broadcast.unpersist
+
+    def capture(value):
+        made.append(broadcast(value))
+        return made[-1]
+
+    def record(self, blocking=False):
+        released.append(self)
+        unpersist(self, blocking)
+
+    monkeypatch.setattr(sc, "broadcast", capture)
+    monkeypatch.setattr(Broadcast, "unpersist", record)
+    baskets = spark.createDataFrame(
+        [([1, 2],), ([1, 2],), ([2, 3],)], "basket array<bigint>"
+    )
+    result = son_frequent_itemsets(baskets, 2, num_partitions=1)
+    assert made and all(any(b is r for r in released) for b in made)
+    got = {tuple(r["itemset"]): r["support"] for r in result.collect()}
+    assert got == {(1,): 2, (2,): 3, (1, 2): 2}
+
+
 def test_son_output_rendering_contract(tmp_path):
     """Reference contract: sizes ascending one line each; itemsets rendered
     '(a, b)' joined by ', '; within a line shorter-first then element-wise

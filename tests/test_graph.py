@@ -2778,35 +2778,61 @@ def test_edge_betweenness_method_routing(spark, monkeypatch):
         assert df.collect() == []
 
 
-def test_edge_betweenness_core_sized_kernel_repeats_exactly(spark):
-    """The kernel runs at most one Python task per core (each Python task
-    pays a fixed worker set-up, whatever its work), and the driver adds
-    the per-slice partials in a fixed order, so two runs return identical
-    doubles."""
+def test_edge_betweenness_core_sized_kernel_repeats_exactly(spark, monkeypatch):
+    """The same graph on both sides of ``DRIVER_KERNEL_WORK``: below it the
+    driver runs the slices and no job follows the adjacency collect; at it
+    the kernel runs at most one Python task per core (each Python task
+    pays a fixed cost, whatever its work). Both add the per-slice partials
+    in slice order, so they return identical doubles."""
+    from inf_553_datamining_mapreduce_spark.operators import graph as G
+
     rng = random.Random(5)
     pairs = sorted({tuple(sorted(rng.sample(range(60), 2))) for _ in range(200)})
+    n_vertices = len({v for p in pairs for v in p})
+    work = n_vertices * (n_vertices + 2 * len(pairs))
     edf = _edges_df(spark, pairs)
     sc = spark.sparkContext
-    group = "graph-core-sized-kernel"
-    sc.setJobGroup(group, group)
-    try:
-        first = edge_betweenness(edf).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # The tracker is fed asynchronously by the listener bus.
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
-    stage_ids = {
-        s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
-    }
-    tasks = [tracker.getStageInfo(s).numTasks for s in stage_ids]
-    # The edge input is local, so every stage here is either the bounded
-    # adjacency collect or the kernel stage.
+
+    def group_jobs(group):
+        # The tracker is fed asynchronously by the listener bus.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(group))
+
+    def run(bound):
+        group = f"graph-kernel-work-{bound}"
+        monkeypatch.setattr(G, "DRIVER_KERNEL_WORK", bound)
+        after_collect = []
+        collect = G._collect_adjacency
+
+        def collect_then_mark(edges, vertices):
+            adj = collect(edges, vertices)
+            after_collect.append(group_jobs(group))
+            return adj
+
+        monkeypatch.setattr(G, "_collect_adjacency", collect_then_mark)
+        sc.setJobGroup(group, group)
+        try:
+            out = edge_betweenness(edf)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        kernel_jobs = group_jobs(group) - after_collect[0]
+        tasks = [
+            tracker.getStageInfo(s).numTasks
+            for j in kernel_jobs
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+        return out.collect(), tasks
+
+    on_driver, driver_tasks = run(work + 1)
+    assert driver_tasks == []
+    distributed, tasks = run(work)
+    # The edge input is local, so the only stage after the collect is the
+    # kernel's.
     assert tasks and max(tasks) <= sc.defaultParallelism, tasks
-    second = edge_betweenness(edf).collect()
-    assert len(first) == len(pairs)
-    assert [tuple(r) for r in first] == [tuple(r) for r in second]
+    assert len(on_driver) == len(pairs)
+    assert [tuple(r) for r in on_driver] == [tuple(r) for r in distributed]
 
 
 # A 12-edge path whose weights follow the ruler sequence (1 + trailing
