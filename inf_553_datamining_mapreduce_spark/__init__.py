@@ -13,7 +13,10 @@ The reference (surveyed in SURVEY.md) covers four query families:
    (``3-Graph Community Detection/Community.scala``)
 
 This engine re-expresses all of them Spark-first (DataFrame / Spark SQL /
-Catalyst; ``mapInPandas`` only for the two genuinely custom kernels), and adds
+Catalyst; Python kernels only where Spark has no operator: SON's A-priori
+phases, the betweenness BFS, and the ``mapInPandas`` kernels of embedding
+dedup, LSH bucketing and media decoding; small SON and betweenness inputs
+run their kernels on the driver), and adds
 the large-scale training-data-pipeline surface the reference lacks: dedup
 (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding), similarity
 search, text analysis, multimodal column plumbing, and windowed / streaming

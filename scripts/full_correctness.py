@@ -32,10 +32,19 @@ def _canonical(df):
     return df.sort_values(by=list(df.columns), ignore_index=True)
 
 
-def _round_tag() -> str | None:
+def _round_tag() -> int | None:
+    """The artifact's round number: ``$SPARK_GRAFT_ROUND`` if set, else
+    one past the newest ``CORRECTNESS_r*.json``. Raises ``SystemExit`` on
+    a non-integer tag; ``main`` calls it before any Spark work, so a bad
+    tag cannot cost a whole sweep."""
     tag = os.environ.get("SPARK_GRAFT_ROUND")
     if tag:
-        return tag
+        try:
+            return int(tag)
+        except ValueError:
+            raise SystemExit(
+                f"SPARK_GRAFT_ROUND must be an integer, got {tag!r}"
+            ) from None
     import glob
 
     ns = [
@@ -43,7 +52,7 @@ def _round_tag() -> str | None:
         for p in glob.glob(os.path.join(REPO_DIR, "CORRECTNESS_r*.json"))
         if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
     ]
-    return str(max(ns) + 1) if ns else None
+    return max(ns) + 1 if ns else None
 
 
 def _compare(spark_pdf, oracle_pdf) -> dict:
@@ -101,6 +110,7 @@ def _compare(spark_pdf, oracle_pdf) -> dict:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    tag = _round_tag()
     import duckdb
     from pyspark.sql import SparkSession
 
@@ -236,9 +246,8 @@ def main() -> None:
         },
     }
     artifact.update(out)
-    tag = _round_tag()
     stem = "CORRECTNESS_SMALLHEAP" if no_explicit else "CORRECTNESS_FULL"
-    fname = f"{stem}_r{int(tag):02d}.json" if tag else f"{stem}.json"
+    fname = f"{stem}_r{tag:02d}.json" if tag is not None else f"{stem}.json"
     with open(os.path.join(REPO_DIR, fname), "w") as fh:
         json.dump(artifact, fh, indent=1, allow_nan=False)
         fh.write("\n")
